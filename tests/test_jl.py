@@ -73,3 +73,23 @@ def test_projection_deterministic_across_partitionings(spark, sf_dir):
         for r in jl_project(emb.repartition(13), d).collect()
     )
     assert a == b
+
+
+def test_half_micro_unit_ties_round_away_from_zero(spark):
+    """An exact .5 micro-unit tie rounds away from zero, as the oracle's
+    DuckDB ``ROUND`` does (round-half-to-even would give ±2, not ±3)."""
+    import duckdb
+
+    # d=1: each coordinate is ±0.25·1e-5, i.e. exactly ±2.5 micro-units.
+    df = spark.createDataFrame(
+        [(1, [1e-5])], "vec_id long, embedding array<double>"
+    )
+    (row,) = jl_project(df, d=1).collect()
+    want = [
+        duckdb.sql(
+            f"SELECT CAST(ROUND({x!r} * 1000000.0) AS BIGINT)"
+        ).fetchone()[0]
+        for x in 1e-5 * jl_matrix(1, JL_K)[0]
+    ]
+    assert {abs(v) for v in row.jl} == {3}
+    assert list(row.jl) == want

@@ -13,14 +13,15 @@ import datetime as dt
 import json
 import os
 import tempfile
-import uuid
 
 from trafsys_data_transfer_spark.plans.traffic import (
     normalize_traffic,
     rollup_traffic,
 )
 from trafsys_data_transfer_spark.streaming.incremental import (
-    run_rollup_to_memory,
+    drain,
+    hourly_rollup_stream,
+    read_traffic_stream,
 )
 
 ROLLUP_COLS = ["SiteCode", "Location", "PeriodEnding", "Ins", "Outs"]
@@ -84,8 +85,9 @@ def test_streaming_rollup_matches_batch_on_boundary_timestamps(spark):
     with open(os.path.join(staging, "drop.json"), "w") as f:
         for r in records:
             f.write(json.dumps(r) + "\n")
-    streamed = run_rollup_to_memory(
-        spark, staging, f"t_bucket_{uuid.uuid4().hex[:8]}"
+    streamed = drain(
+        hourly_rollup_stream(read_traffic_stream(spark, staging)),
+        output_mode="complete",
     )
     got = {
         r["PeriodEnding"]: (r["Ins"], r["Outs"])

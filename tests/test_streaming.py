@@ -6,7 +6,6 @@ from __future__ import annotations
 import json
 import os
 import tempfile
-import uuid
 
 from pyspark.sql import functions as F
 
@@ -16,10 +15,10 @@ from trafsys_data_transfer_spark.sources.fixtures import load_table
 
 from conftest import SF_DIR
 from trafsys_data_transfer_spark.streaming.incremental import (
+    drain,
     hourly_rollup_stream,
     read_traffic_stream,
     run_incremental_merge,
-    run_rollup_to_memory,
 )
 
 
@@ -35,7 +34,10 @@ def test_stream_rollup_equals_batch(spark, sf_dir):
     staging = tempfile.mkdtemp(prefix="t_stream_eq_")
     raw.coalesce(1).write.mode("overwrite").json(staging)
 
-    streamed = run_rollup_to_memory(spark, staging, f"t_eq_{uuid.uuid4().hex[:8]}")
+    streamed = drain(
+        hourly_rollup_stream(read_traffic_stream(spark, staging)),
+        output_mode="complete",
+    )
     batch = rollup_traffic(normalize_traffic(raw), grain="hour")
     assert _rows(streamed, ROLLUP_COLS) == _rows(batch, ROLLUP_COLS)
 
@@ -306,89 +308,13 @@ def test_scd2_state_fn_cross_batch_versions():
     assert out3 == [] and st.get[1] == 3
 
 
-def test_scd2_tws_processor_matches_applyinpandas_path():
-    """Both stateful-API implementations share _compress_runs; drive the
-    transformWithState processor with a fake handle and assert it emits
-    exactly what the applyInPandasWithState path emits."""
-    import pandas as pd
-
-    from trafsys_data_transfer_spark.streaming.scd2 import (
-        SCD2Processor,
-        _scd2_fn,
-    )
-
-    class _FakeVS:
-        def __init__(self):
-            self._v = None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    class _FakeHandle:
-        def __init__(self):
-            self.vs = _FakeVS()
-
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            return self.vs
-
-    def batch(rows):
-        return pd.DataFrame(
-            rows, columns=["user_id", "ts", "event_id", "event_type"]
-        ).astype({"ts": "datetime64[ns]"})
-
-    t = lambda m: pd.Timestamp(2024, 1, 1, 0, m)  # noqa: E731
-    b1 = [(5, t(0), 1, "A"), (5, t(1), 2, "B")]
-    b2 = [(5, t(2), 3, "B"), (5, t(3), 4, "C")]
-
-    proc = SCD2Processor()
-    proc.init(_FakeHandle())
-    tws_out = [
-        df
-        for b in (b1, b2)
-        for df in proc.handleInputRows((5,), iter([batch(b)]), None)
-    ]
-
-    st = _FakeState()
-    apip_out = [
-        df for b in (b1, b2) for df in _scd2_fn((5,), iter([batch(b)]), st)
-    ]
-    assert len(tws_out) == len(apip_out) == 2
-    for a, b in zip(tws_out, apip_out):
-        pd.testing.assert_frame_equal(a, b)
-
-
-def test_scd2_tws_end_to_end_matches_batch(spark, sf_dir):
-    """transformWithStateInPandas e2e == batch oracle — requires
-    google.protobuf (the TWS worker protocol), so it runs only in
-    environments that ship it.  Re-checked absent 2026-08-14, 2026-08-15
-    (r7), 2026-08-15 (r8), 2026-08-16 (r11 session start), and again
-    2026-08-16 (r11 final session: `pip install
-    protobuf` → "No matching distribution found", no network): still no
-    google.protobuf in the container, skip stands; the shared-core
-    equivalence test above certifies the TWS processor logic at unit
-    level."""
-    import pytest
-
-    pytest.importorskip("google.protobuf")
-    from trafsys_data_transfer_spark.operators.scd import scd2_build
-    from trafsys_data_transfer_spark.sources.fixtures import load_table
-    from trafsys_data_transfer_spark.streaming.queries import streaming_scd2_tws
-
-    got = [tuple(r) for r in streaming_scd2_tws(spark, sf_dir).collect()]
-    want = [tuple(r) for r in scd2_build(load_table(spark, sf_dir, "events")).collect()]
-    assert got == want
-
-
 def test_scd2_sink_replay_idempotent(spark, tmp_path):
     """Crash between sink write and offset commit replays the micro-batch:
     the batch-id-keyed overwrite sink must leave the target unchanged."""
-    from trafsys_data_transfer_spark.streaming.queries import _scd2_sink
+    from trafsys_data_transfer_spark.streaming.incremental import batch_id_sink
 
     target = str(tmp_path / "out")
-    sink = _scd2_sink(target)
+    sink = batch_id_sink(target, lambda batch: batch)
     df = spark.createDataFrame(
         [(1, "A", 10)], "user_id long, event_type string, version long"
     )
@@ -406,7 +332,6 @@ def test_trending_topk_accumulates_across_micro_batches(spark, sf_dir):
     stage the events in TWO parquet drops (maxFilesPerTrigger=1 → two
     batches), drain, and compare against the one-shot batch rank."""
     import tempfile
-    import uuid
 
     from pyspark.sql.window import Window as W
 
@@ -418,25 +343,18 @@ def test_trending_topk_accumulates_across_micro_batches(spark, sf_dir):
     other = events.filter(F.col("event_id") % 2 == 1)
     half.coalesce(1).write.mode("append").parquet(staging)
     other.coalesce(1).write.mode("append").parquet(staging)
-    table = f"trend2b_{uuid.uuid4().hex[:8]}"
-    q = (
+    counts = drain(
         spark.readStream.schema(events.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(staging)
         .withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "6 hours").alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .writeStream.format("memory")
-        .queryName(table)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+        .agg(F.count(F.lit(1)).alias("cnt")),
+        output_mode="complete",
     )
-    q.awaitTermination()
     rnk_w = W.partitionBy("w").orderBy(F.col("cnt").desc(), "user_id")
     drained = (
-        spark.table(table)
-        .withColumn("rnk", F.row_number().over(rnk_w))
+        counts.withColumn("rnk", F.row_number().over(rnk_w))
         .filter(F.col("rnk") <= 5)
         .select(F.col("w.start").alias("ws"), "rnk", "user_id", "cnt")
     )
@@ -735,9 +653,6 @@ def test_cap_stream_out_of_order_slices_match_batch_oracle(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from trafsys_data_transfer_spark.streaming.cap import cap_stream
-    from trafsys_data_transfer_spark.streaming.incremental import (
-        _stream_partitions,
-    )
 
     events = (
         load_table(spark, SF_DIR, "events")
@@ -796,20 +711,9 @@ def test_cap_stream_out_of_order_slices_match_batch_oracle(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(staging)
     )
-    table = "cap_disorder_t"
-    with _stream_partitions(spark):
-        q = (
-            cap_stream(stream, cap=5, lateness="90 days")
-            .writeStream.format("memory")
-            .queryName(table)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     got = {
         (r.event_type, r.user_id, r.event_id)
-        for r in spark.table(table).collect()
+        for r in drain(cap_stream(stream, cap=5, lateness="90 days")).collect()
     }
     from pyspark.sql.window import Window
 
@@ -906,16 +810,7 @@ def test_streaming_ohlc_cross_batch_open_close(spark):
             F.count(F.lit(1)).alias("volume"),
         )
     )
-    name = f"t_ohlc_{uuid.uuid4().hex[:8]}"
-    q = (
-        bars.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.table(name).collect()
+    got = drain(bars, output_mode="complete").collect()
     assert len(got) == 1
     bar = got[0]
     assert (bar.open_cents, bar.high_cents, bar.low_cents, bar.close_cents, bar.volume) == (

@@ -416,15 +416,24 @@ def test_versioned_compact_rebases_over_concurrent_append(spark, tmp_path):
 def test_versioned_compact_aborts_if_base_files_replaced(spark, tmp_path):
     """A concurrent REPLACE invalidates the rewrite: compaction must
     abort, leaving the replace's state intact."""
+    import json
+
     import pytest as _pytest
 
     from trafsys_data_transfer_spark.operators.timetravel import (
+        _manifest_path,
         versioned_compact,
     )
 
     table = str(tmp_path / "t")
     os.makedirs(os.path.join(table, "data"))
-    versioned_commit(spark, _df(spark, [("a", "d1", 1)]).repartition(2), table)
+    # Two appends give the base version two data files, so compaction has
+    # something to rewrite and reaches its claim.
+    versioned_commit(spark, _df(spark, [("a", "d1", 1)]), table)
+    versioned_commit(spark, _df(spark, [("b", "d1", 2)]), table)
+    base_v = table_versions(spark, table)[-1]
+    with open(_manifest_path(table, base_v)) as fh:
+        assert len(json.load(fh)["files"]) >= 2
 
     def replace_under_us(_version):
         versioned_commit(

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import os
 
 import pytest
 
@@ -153,6 +154,30 @@ def test_fetch_window_feeds_pipeline(spark, tmp_path):
     )
     assert info["Records"] == 2
     assert read_target(spark, str(tmp_path / "target")).count() == 2
+
+
+def test_reused_staging_dir_does_not_replay_earlier_nights(spark, tmp_path):
+    """Two nights land into ONE caller-owned staging dir: night 2's
+    ``Records`` counts only the rows delivered that night, not night 1's
+    landed payload as well."""
+    from trafsys_data_transfer_spark.plans.pipeline import read_target, run_pipeline
+
+    target, runlog = str(tmp_path / "target"), str(tmp_path / "runlog")
+    staging = str(tmp_path / "staging")
+    night2 = [
+        dict(RECORDS[0], PeriodEnding="2024-01-02T10:00:00"),
+        dict(RECORDS[0], PeriodEnding="2024-01-02T11:00:00", Ins=9),
+        dict(RECORDS[1], PeriodEnding="2024-01-02T12:00:00"),
+    ]
+    for day, traffic in (("2024-01-01", RECORDS), ("2024-01-02", night2)):
+        api = FakeApi(traffic=traffic)
+        fetch = make_fetch_window(spark, BASE, make_tokens(api), api, staging)
+        info = run_pipeline(
+            spark, fetch, target, runlog, cli_from=day, cli_to=day
+        )
+    assert info["Records"] == len(night2)
+    assert len(os.listdir(staging)) == 2  # one landing dir per fetch
+    assert read_target(spark, target).count() == len(RECORDS) + len(night2)
 
 
 def test_sub_windows_cover_range_without_overlap():

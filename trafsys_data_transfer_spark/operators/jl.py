@@ -67,11 +67,12 @@ def jl_project(vecs: DataFrame, d: int, k: int = JL_K, seed: int = JL_SEED) -> D
             if pdf.empty:
                 continue
             x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            proj = x @ w
+            scaled = (x @ w) * 1_000_000.0
+            # half away from zero, like the oracle's SQL ROUND (np.rint
+            # would round an exact .5 tie to even)
+            micro = np.sign(scaled) * np.floor(np.abs(scaled) + 0.5)
             out = pdf[["vec_id"]].copy()
-            out["jl"] = [
-                [int(v) for v in np.rint(row * 1_000_000.0)] for row in proj
-            ]
+            out["jl"] = [[int(v) for v in row] for row in micro]
             yield out
 
     return vecs.select("vec_id", "embedding").mapInPandas(

@@ -138,11 +138,9 @@ def pretrain_funnel(
     # id — so the former groupBy(component).min(id) + join re-derived a
     # column comp already carries (equivalence asserted row-for-row in
     # the r12 probe; the portable tier's end-to-end oracle hash pins it).
+    keepers = comp.filter(F.col("id") == F.col("component"))
     neardup = (
-        exact.join(
-            comp.filter(F.col("id") == F.col("component")),
-            exact.doc_id == comp.id,
-        )
+        exact.join(keepers, exact.doc_id == keepers.id)
         .select(*base.columns)
         .localCheckpoint(eager=True)
     )

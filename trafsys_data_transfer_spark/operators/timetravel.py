@@ -1757,14 +1757,14 @@ def timetravel_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero-copy claim (the clone's data dir holds ONLY its own post-fork
     files) and isolation in both directions (source version count and
     rows unchanged after the clone's commit)."""
-    import tempfile
+    from ..fsutil import process_staging_dir
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.floor(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
-    src = os.path.join(tempfile.mkdtemp(prefix="tds_clone_src_"), "t")
-    dst = os.path.join(tempfile.mkdtemp(prefix="tds_clone_dst_"), "t")
+    root = process_staging_dir("clone", uuid.uuid4().hex)
+    src, dst = os.path.join(root, "src", "t"), os.path.join(root, "dst", "t")
     versioned_commit(spark, orders.filter(F.col("o_orderkey") % 3 == 0), src)
     versioned_commit(spark, orders.filter(F.col("o_orderkey") % 3 == 1), src)
     src_versions_before = table_versions(spark, src)

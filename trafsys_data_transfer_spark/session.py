@@ -11,8 +11,11 @@ operators.
 
 from __future__ import annotations
 
+import atexit
 import os
+import subprocess
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 
@@ -139,4 +142,25 @@ def get_spark(app_name: str = "trafsys_data_transfer_spark") -> SparkSession:
         builder = builder.master(f"local[{cpus}]")
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    atexit.unregister(_stop_jvm)
+    atexit.register(_stop_jvm)
     return spark
+
+
+def _stop_jvm() -> None:
+    """At interpreter exit, stop Spark and wait for the JVM to exit before
+    Python does.  The JVM removes its temp entries (native-library copies,
+    artifact and scratch dirs) in shutdown hooks; a parent that kills the
+    process group once Python has exited would cut those hooks short and
+    leave the entries in TMPDIR."""
+    sc = SparkContext._active_spark_context
+    if sc is not None:
+        sc.stop()
+    proc = getattr(SparkContext._gateway, "proc", None)
+    if proc is None:
+        return
+    proc.stdin.close()  # the gateway server exits when its stdin closes
+    try:
+        proc.wait(timeout=30)
+    except subprocess.TimeoutExpired:
+        pass

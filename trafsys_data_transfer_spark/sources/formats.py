@@ -129,12 +129,13 @@ def docs_jsonl_ingest_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     back is a schema-enforced scan whose corrupt filter is a map-side
     predicate — same cost shape as any JSON ingest, no extra shuffle
     beyond the final small per-source rollup."""
-    import tempfile
+    import uuid
 
+    from ..fsutil import process_staging_dir
     from ..sources.fixtures import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    staging = tempfile.mkdtemp(prefix="tds_jsonl_ingest_")
+    staging = process_staging_dir("jsonl_ingest", uuid.uuid4().hex)
     line = F.to_json(
         F.struct("doc_id", "text", "lang", "source", "n_chars")
     )

@@ -25,13 +25,14 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
-import tempfile
 import time
+import uuid
 from collections.abc import Callable
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..fsutil import process_staging_dir
 from ..schemas import TRAFFIC_RAW_SCHEMA
 
 #: transport(method, url, *, params, data, headers) -> (status_code, body_text)
@@ -198,17 +199,24 @@ def fetch_traffic_records(
 
 
 def land_records(records: list[dict[str, Any]], staging_dir: str | None = None) -> str:
-    """Write fetched records as JSON-lines into a staging dir the engine
-    reads back schema-first.  Landing (rather than parallelize()) keeps the
-    raw payload replayable — re-running a window is a re-read, not a
-    re-fetch."""
-    staging_dir = staging_dir or tempfile.mkdtemp(prefix="trafsys_landing_")
-    os.makedirs(staging_dir, exist_ok=True)
-    path = os.path.join(staging_dir, f"batch_{int(time.time() * 1000)}.json")
-    with open(path, "w") as f:
+    """Write fetched records as JSON-lines into a fresh per-fetch directory
+    the engine reads back schema-first, and return that directory.
+    Landing (rather than parallelize()) keeps the raw payload replayable —
+    re-running a window is a re-read, not a re-fetch.
+
+    The directory is created under ``staging_dir`` when given (kept for
+    the caller), else under the process staging dir (removed at exit).
+    Each fetch gets its own directory, so reading it back never replays
+    an earlier night's payload from a reused ``staging_dir``."""
+    root = staging_dir or process_staging_dir("trafsys_landing")
+    landing = os.path.join(
+        root, f"batch_{int(time.time() * 1000)}_{uuid.uuid4().hex[:8]}"
+    )
+    os.makedirs(landing)
+    with open(os.path.join(landing, "records.json"), "w") as f:
         for r in records:
             f.write(json.dumps(r) + "\n")
-    return staging_dir
+    return landing
 
 
 def read_landed(spark: SparkSession, staging_dir: str) -> DataFrame:

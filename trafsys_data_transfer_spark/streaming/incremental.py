@@ -22,11 +22,14 @@ rewrites only the date partitions present in each micro-batch.
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..fsutil import process_staging_dir
 from ..operators.merge import dedupe_last_write, merge_upsert_parquet
 from ..plans.pipeline import PARTITION_COL
 from ..plans.traffic import normalize_traffic
@@ -108,6 +111,124 @@ def _stream_partitions(
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
+def drain(
+    stream_df: DataFrame,
+    *,
+    output_mode: str = "append",
+    foreach_batch=None,
+    checkpoint: str | None = None,
+    partitions: int = STREAM_SHUFFLE_PARTITIONS,
+) -> DataFrame | None:
+    """Run ``stream_df`` to completion with ``Trigger.AvailableNow``: every
+    input available at start is processed in one or more micro-batches,
+    then the query stops.  This is the one place a streaming query of the
+    engine is started and awaited.
+
+    Without ``foreach_batch`` the rows go to a memory sink under a fresh
+    query name and the drained table is returned.  With it, each
+    micro-batch is handed to ``foreach_batch(batch_df, batch_id)`` under
+    ``checkpoint`` (the offset log that makes a re-run pick up only new
+    input) and ``None`` is returned.  Shuffle partitions are pinned to
+    ``partitions`` for the query's first start (see
+    :data:`STREAM_SHUFFLE_PARTITIONS`)."""
+    spark = stream_df.sparkSession
+    writer = stream_df.writeStream.outputMode(output_mode).trigger(
+        availableNow=True
+    )
+    if foreach_batch is None:
+        name = f"drain_{uuid.uuid4().hex}"
+        writer = writer.format("memory").queryName(name)
+    else:
+        writer = writer.foreachBatch(foreach_batch).option(
+            "checkpointLocation", checkpoint
+        )
+    with _stream_partitions(spark, n=partitions):
+        writer.start().awaitTermination()
+    return spark.table(name) if foreach_batch is None else None
+
+
+def stage_dir(name: str) -> str:
+    """A fresh, empty directory for one drain's staging input, sink,
+    store or checkpoint.  It lives under the process staging dir
+    (:func:`fsutil.process_staging_dir`), so it is removed when the
+    process exits."""
+    path = process_staging_dir("stream", f"{name}_{uuid.uuid4().hex[:12]}")
+    os.makedirs(path)
+    return path
+
+
+def stage_day_slices(df: DataFrame, ts_col: str, staging: str):
+    """Stage ``df`` into ``staging`` as three day-sliced drops: the
+    ``[d0, d1]`` day span of ``ts_col`` is cut into thirds (the last
+    slice takes the remainder), all slices are written by ONE partitioned
+    job (three filter+coalesce jobs measured 16 s of a 20 s drain), and
+    slice ``i``'s files are copied in as
+    ``slice-{i:03d}-{j:03d}.parquet`` with mtime ``1_700_000_000 + 10·i``.
+    The file source orders files by mtime, so ``maxFilesPerTrigger``
+    turns the slices into consecutive micro-batches in day order.
+
+    Returns ``(d0, d1, step, staged)``: the day span, the slice width in
+    days, and the indices of the slices that received files."""
+    d0, d1 = df.agg(
+        F.min(F.col(ts_col).cast("date")), F.max(F.col(ts_col).cast("date"))
+    ).first()
+    step = max(1, ((d1 - d0).days + 1) // 3)
+    parts = stage_dir("slices")
+    (
+        df.withColumn(
+            "slice",
+            F.least(
+                F.floor(
+                    F.datediff(F.col(ts_col).cast("date"), F.lit(d0)) / step
+                ),
+                F.lit(2),
+            ),
+        )
+        .repartition("slice")
+        .write.partitionBy("slice")
+        .mode("overwrite")
+        .parquet(parts)
+    )
+    staged = []
+    for i in range(3):
+        sdir = os.path.join(parts, f"slice={i}")
+        if not os.path.isdir(sdir):
+            continue
+        staged.append(i)
+        base = 1_700_000_000 + i * 10
+        for j, f in enumerate(sorted(os.listdir(sdir))):
+            if f.endswith(".parquet") and not f.startswith(("_", ".")):
+                dst = os.path.join(staging, f"slice-{i:03d}-{j:03d}.parquet")
+                shutil.copyfile(os.path.join(sdir, f), dst)
+                os.utime(dst, (base, base))
+    return d0, d1, step, staged
+
+
+def batch_id_sink(store: str, build):
+    """Idempotent ``foreachBatch`` sink: micro-batch ``N`` writes
+    ``build(batch_df)`` over ``store/batch_id=N``.  ``foreachBatch`` is
+    at-least-once: a crash between the sink write and the offset commit
+    replays the batch, and a plain append would then store its rows
+    twice.  Keying the write by batch id makes the replay overwrite its
+    own output instead (§2.8d).  On read-back the ``batch_id=N``
+    directories surface as a partition column.
+
+    There is no emptiness probe.  An AvailableNow drain without a
+    watermark hands ``foreachBatch`` no empty input batch, an empty
+    output writes a ``batch_id=N`` directory that reads back as zero
+    rows, and a probe on a stateful operator's output runs the operator
+    a second time (on a 4-core host it took streaming_scd2 from 6 s to
+    10 s; persisting the output for the probe cost 0.5-0.9 s per
+    partials drain)."""
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        build(batch_df).write.mode("overwrite").parquet(
+            os.path.join(store, f"batch_id={batch_id}")
+        )
+
+    return sink
+
+
 def read_traffic_stream(spark: SparkSession, source_dir: str) -> DataFrame:
     """File-source stream of landed TrafSys payloads (one JSON record per
     line), schema-enforced exactly like the batch path (§1.3): the producer
@@ -150,115 +271,6 @@ def hourly_rollup_stream(
     )
 
 
-def run_rollup_to_memory(
-    spark: SparkSession, source_dir: str, table_name: str
-) -> DataFrame:
-    """Drain the source with ``Trigger.AvailableNow`` into an in-memory sink
-    (complete mode → every window emitted regardless of watermark position)
-    and return the result table.  Used by tests and the correctness gate to
-    prove stream == batch on the same input."""
-    with _stream_partitions(spark):
-        q = (
-            hourly_rollup_stream(read_traffic_stream(spark, source_dir))
-            .writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(table_name)
-
-
-def run_stream_dedup_to_memory(
-    spark: SparkSession,
-    source_dir: str,
-    table_name: str,
-    schema,
-    keys: list[str],
-    event_time_col: str = "ts",
-    lateness: str = "24 hours",
-) -> DataFrame:
-    """Streaming exactly-once-per-key dedup over an at-least-once source:
-    ``withWatermark`` + ``dropDuplicatesWithinWatermark(keys)`` drained with
-    ``Trigger.AvailableNow`` into a memory sink.
-
-    This is the streaming twin of the reference's idempotent-upsert replay
-    tolerance (§2.8): redelivered rows inside the lateness horizon are
-    dropped by keyed state instead of collapsed by the sink.  Unlike plain
-    ``dropDuplicates`` on a stream, the *WithinWatermark* form expires each
-    key's state once the watermark passes it — state is bounded by keys per
-    lateness window, not keys ever seen, which is what makes it viable on
-    an unbounded 100 TB/day feed.
-    """
-    # One file per micro-batch: redelivered files arrive in LATER batches,
-    # so surviving the oracle check proves cross-batch keyed state, not
-    # just within-batch dedup.
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-    with _stream_partitions(spark):
-        q = (
-            stream.withWatermark(event_time_col, lateness)
-            .dropDuplicatesWithinWatermark(keys)
-            .writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(table_name)
-
-
-def run_stream_stream_join_to_memory(
-    spark: SparkSession,
-    left_dir: str,
-    right_dir: str,
-    table_name: str,
-    schema,
-    join_expr,
-    select_cols: list,
-    event_time_col: str = "ts",
-    lateness: str = "30 minutes",
-) -> DataFrame:
-    """Watermarked stream-stream inner join drained with AvailableNow into
-    a memory sink.
-
-    Both sides buffer rows in join state until the watermark passes the
-    time-range condition's bound — state is O(rows inside the lateness ×
-    range window per key), never the whole stream, which is what makes a
-    view→click attribution join runnable on an unbounded feed.  The
-    correctness contract (asserted by the oracle): a fully-drained
-    bounded stream must emit exactly the batch inner join of the same
-    inputs.
-    """
-    left = (
-        spark.readStream.schema(schema).parquet(left_dir)
-        .withWatermark(event_time_col, lateness)
-        .alias("l")
-    )
-    right = (
-        spark.readStream.schema(schema).parquet(right_dir)
-        .withWatermark(event_time_col, lateness)
-        .alias("r")
-    )
-    with _stream_partitions(spark):
-        q = (
-            left.join(right, join_expr)
-            .select(*select_cols)
-            .writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(table_name)
-
-
 def run_stream_merge(
     stream: DataFrame,
     target_path: str,
@@ -274,7 +286,6 @@ def run_stream_merge(
     offset is the API watermark) both terminate here, so "fetch → upsert"
     is the same audited sink code whichever source feeds it.
     """
-    spark = stream.sparkSession
 
     def _merge_batch(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
@@ -292,14 +303,7 @@ def run_stream_merge(
             partition_col=PARTITION_COL,
         )
 
-    with _stream_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(_merge_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(stream, foreach_batch=_merge_batch, checkpoint=checkpoint_dir)
 
 
 def run_incremental_merge(

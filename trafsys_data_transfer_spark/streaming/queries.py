@@ -1,19 +1,28 @@
 """Correctness-gate queries for the streaming layer.
 
-Both queries stage a deterministic traffic-shaped JSON drop derived from the
-``events`` fixture, drain it through a real Structured Streaming query
-(file source → checkpointed offsets → AvailableNow trigger), and return the
-result as a batch DataFrame.  The DuckDB oracles are the *batch* semantics
-over the same input — the assertion is stream == batch, the defining
-property of a correctly incremental pipeline.
+Each query stages a deterministic drop derived from a fixture, runs it
+through a real Structured Streaming query and returns the result as a
+batch DataFrame.  The DuckDB oracles are the *batch* semantics over the
+same input — the assertion is stream == batch, the defining property of a
+correctly incremental pipeline.
+
+The drain lifecycle is shared (``streaming/incremental.py``):
+
+* :func:`stage_dir` gives every staging input, sink, store and checkpoint
+  a fresh directory under the process staging dir, removed at exit;
+* :func:`stage_day_slices` stages the three day-sliced drops the stateful
+  twins use to force state across micro-batches;
+* :func:`drain` starts the query with ``Trigger.AvailableNow``, awaits it,
+  and returns the memory-sink table (or ``None`` for a ``foreachBatch``
+  sink, whose output the query reads back itself);
+* :func:`batch_id_sink` is the idempotent ``foreachBatch`` store for
+  per-micro-batch partials.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -23,19 +32,46 @@ from ..plans.traffic_queries import _TRAFFIC_CTE, traffic_raw_from_events
 from ..registry import register
 from ..sources.fixtures import load_table
 from .incremental import (
+    STREAM_SHUFFLE_PARTITIONS,
+    batch_id_sink,
+    drain,
+    hourly_rollup_stream,
+    read_traffic_stream,
     run_incremental_merge,
-    run_rollup_to_memory,
-    run_stream_dedup_to_memory,
-    run_stream_stream_join_to_memory,
+    stage_day_slices,
+    stage_dir,
 )
 
 
-def _stage_raw_json(raw: DataFrame, prefix: str) -> str:
+def _stage_raw_json(raw: DataFrame, name: str) -> str:
     """Land a raw traffic batch as a single JSON-lines file (one file → one
     deterministic micro-batch under AvailableNow)."""
-    staging = tempfile.mkdtemp(prefix=prefix)
+    staging = stage_dir(name)
     raw.coalesce(1).write.mode("overwrite").json(staging)
     return staging
+
+
+def _join_side(
+    spark: SparkSession, schema, path: str, alias: str, max_files: int | None = None
+) -> DataFrame:
+    """One watermarked side of a stream-stream join: a parquet file stream
+    with 30 minutes of lateness, aliased ``l``/``r`` for the join
+    condition.  ``max_files`` bounds files per micro-batch (the outer
+    joins' sentinel file must land in a batch of its own)."""
+    reader = spark.readStream.schema(schema)
+    if max_files is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files)
+    return reader.parquet(path).withWatermark("ts", "30 minutes").alias(alias)
+
+
+def _follows_within(minutes: int):
+    """Join condition of the ``l``/``r`` sides: same user, and the right
+    event at most ``minutes`` after the left one."""
+    return (
+        (F.col("l.user_id") == F.col("r.user_id"))
+        & (F.col("r.ts") >= F.col("l.ts"))
+        & (F.col("r.ts") <= F.col("l.ts") + F.expr(f"INTERVAL {minutes} MINUTES"))
+    )
 
 
 def _denormalize(df: DataFrame) -> DataFrame:
@@ -67,9 +103,12 @@ def streaming_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums must equal the batch rollup (traffic_hourly_rollup) on the same
     input."""
     raw = traffic_raw_from_events(load_table(spark, sf_dir, "events"))
-    staging = _stage_raw_json(raw, "tds_stream_rollup_")
-    table = f"stream_rollup_{uuid.uuid4().hex[:8]}"
-    return run_rollup_to_memory(spark, staging, table)
+    staging = _stage_raw_json(raw, "rollup")
+    # complete mode: every window is emitted regardless of watermark position
+    return drain(
+        hourly_rollup_stream(read_traffic_stream(spark, staging)),
+        output_mode="complete",
+    )
 
 
 @register(
@@ -89,7 +128,7 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
-    staging = tempfile.mkdtemp(prefix="tds_stream_dedup_")
+    staging = stage_dir("dedup")
     # Two identical drops = a full at-least-once redelivery of the feed.
     # The second drop is a byte-level copy of the first file (what a real
     # redelivery is), not a second write job.
@@ -101,9 +140,18 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.copyfile(
         os.path.join(staging, part), os.path.join(staging, f"redelivered-{part}")
     )
-    table = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    return run_stream_dedup_to_memory(
-        spark, staging, table, events.schema, keys=["event_id"]
+    # One file per micro-batch: the redelivered file arrives in a LATER
+    # batch, so surviving the oracle check proves cross-batch keyed state,
+    # not just within-batch dedup.
+    stream = (
+        spark.readStream.schema(events.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(staging)
+    )
+    return drain(
+        stream.withWatermark("ts", "24 hours").dropDuplicatesWithinWatermark(
+            ["event_id"]
+        )
     )
 
 
@@ -129,29 +177,23 @@ def streaming_view_click_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type"
     )
-    views_dir = tempfile.mkdtemp(prefix="tds_ss_views_")
-    clicks_dir = tempfile.mkdtemp(prefix="tds_ss_clicks_")
+    views_dir, clicks_dir = stage_dir("ss_views"), stage_dir("ss_clicks")
     events.filter(F.col("event_type") == "view").coalesce(1).write.mode(
         "append"
     ).parquet(views_dir)
     events.filter(F.col("event_type") == "click").coalesce(1).write.mode(
         "append"
     ).parquet(clicks_dir)
-    table = f"stream_ssjoin_{uuid.uuid4().hex[:8]}"
-    join_expr = (
-        (F.col("l.user_id") == F.col("r.user_id"))
-        & (F.col("r.ts") >= F.col("l.ts"))
-        & (F.col("r.ts") <= F.col("l.ts") + F.expr("INTERVAL 10 MINUTES"))
-    )
-    select_cols = [
-        F.col("l.event_id").alias("view_id"),
-        F.col("r.event_id").alias("click_id"),
-        F.col("l.user_id").alias("user_id"),
-        F.col("l.ts").alias("view_ts"),
-        F.col("r.ts").alias("click_ts"),
-    ]
-    return run_stream_stream_join_to_memory(
-        spark, views_dir, clicks_dir, table, events.schema, join_expr, select_cols
+    left = _join_side(spark, events.schema, views_dir, "l")
+    right = _join_side(spark, events.schema, clicks_dir, "r")
+    return drain(
+        left.join(right, _follows_within(10)).select(
+            F.col("l.event_id").alias("view_id"),
+            F.col("r.event_id").alias("click_id"),
+            F.col("l.user_id").alias("user_id"),
+            F.col("l.ts").alias("view_ts"),
+            F.col("r.ts").alias("click_ts"),
+        )
     )
 
 
@@ -178,27 +220,16 @@ def streaming_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_name").alias("customer_name"),
         F.col("c_mktsegment").alias("segment"),
     )
-    staging = tempfile.mkdtemp(prefix="tds_stream_enrich_")
+    staging = stage_dir("enrich")
     events.coalesce(1).write.mode("append").parquet(staging)
     stream = spark.readStream.schema(
         "event_id long, ts timestamp, user_id long, event_type string, value double"
     ).parquet(staging)
-    enriched = stream.join(F.broadcast(customers), "user_id").select(
-        "event_id", "user_id", "event_type", "value", "customer_name", "segment"
-    )
-    table = f"stream_enrich_{uuid.uuid4().hex[:8]}"
-    from .incremental import _stream_partitions
-
-    with _stream_partitions(spark):
-        q = (
-            enriched.writeStream.format("memory")
-            .queryName(table)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+    return drain(
+        stream.join(F.broadcast(customers), "user_id").select(
+            "event_id", "user_id", "event_type", "value", "customer_name", "segment"
         )
-        q.awaitTermination()
-    return spark.table(table)
+    )
 
 
 @register(
@@ -233,7 +264,7 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     session on drain regardless of watermark position (the bounded-input
     twin of an always-on pipeline whose tail sessions stay in state)."""
     events = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id")
-    staging = tempfile.mkdtemp(prefix="tds_stream_sesswin_")
+    staging = stage_dir("sesswin")
     for parity in (0, 1):
         events.filter(F.col("event_id") % 2 == parity).select(
             "user_id", "ts"
@@ -253,19 +284,7 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("user_id", "session_start", "session_end", "n_events")
     )
-    table = f"stream_sesswin_{uuid.uuid4().hex[:8]}"
-    from .incremental import _stream_partitions
-
-    with _stream_partitions(spark):
-        q = (
-            sessions.writeStream.format("memory")
-            .queryName(table)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(table)
+    return drain(sessions, output_mode="complete")
 
 
 @register(
@@ -311,9 +330,9 @@ def streaming_merge_restate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Ins", F.col("Ins") + 1000
     )
 
-    source = tempfile.mkdtemp(prefix="tds_stream_merge_src_")
-    target = tempfile.mkdtemp(prefix="tds_stream_merge_tgt_") + "/target"
-    checkpoint = tempfile.mkdtemp(prefix="tds_stream_merge_ckpt_")
+    source = stage_dir("merge_src")
+    target = os.path.join(stage_dir("merge_tgt"), "target")
+    checkpoint = stage_dir("merge_ckpt")
 
     _denormalize(b1).coalesce(1).write.mode("append").json(source)
     run_incremental_merge(spark, source, target, checkpoint)
@@ -373,27 +392,16 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = events.unionByName(sentinel).select(
         "user_id", F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias("ts")
     )
-    source = tempfile.mkdtemp(prefix="tds_stream_sess_")
+    source = stage_dir("sess")
     staged.coalesce(1).write.mode("overwrite").json(source)
 
     stream = spark.readStream.schema("user_id long, ts timestamp").json(source)
-    table = f"stream_sess_{uuid.uuid4().hex[:8]}"
-    from .incremental import _stream_partitions
-
-    with _stream_partitions(spark):
-        q = (
-            sessionize_stream(stream)
-            .writeStream.format("memory")
-            .queryName(table)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     # Sentinel-only sessions stay open in state; nothing to filter out of
     # the emitted rows, but guard anyway in case a future change flushes
     # them on drain.
-    return spark.table(table).filter(F.col("session_start") < F.lit("2030-01-01"))
+    return drain(sessionize_stream(stream)).filter(
+        F.col("session_start") < F.lit("2030-01-01")
+    )
 
 
 _SCD2_STREAM_ORACLE = """
@@ -418,35 +426,22 @@ ORDER BY user_id, version
 """
 
 
-def _scd2_sink(target: str):
-    """Idempotent foreachBatch sink: each micro-batch OVERWRITES its own
-    ``batch_id=N`` subdirectory.  A plain append would double-emit closed
-    versions when a crash lands between sink write and offset commit and
-    the micro-batch replays (§2.8d; the MERGE sink is idempotent by
-    construction, a file-append sink must be made so by batch-id keying).
-    Replay-idempotence is unit-tested directly in tests/test_streaming.py.
+@register("streaming_scd2", oracle=_SCD2_STREAM_ORACLE)
+def streaming_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stateful streaming SCD2 on ``applyInPandasWithState``
+    (:mod:`.scd2`), drained in two drops: the events fixture is split at
+    its epoch midpoint into two time-ordered drops drained through ONE
+    checkpoint (two AvailableNow passes) — versions opened by drop 1 and
+    closed by drop 2 certify cross-micro-batch state continuity, exactly
+    the ``events_scd2_apply_late_batch`` split pushed down into keyed
+    state.  A far-future sentinel attribute closes every real open
+    version on the second pass; the sentinel's own versions stay in state
+    unemitted, and real last versions get their ``valid_to`` nulled back
+    (they closed at the sentinel, not at real data).  Closed versions
+    land through the idempotent :func:`batch_id_sink`; its replay
+    behaviour is unit-tested in tests/test_streaming.py.
     """
-
-    def sink(batch: DataFrame, bid: int) -> None:
-        batch.write.mode("overwrite").parquet(
-            os.path.join(target, f"batch_id={bid}")
-        )
-
-    return sink
-
-
-def _scd2_drain(spark: SparkSession, sf_dir: str, stream_op) -> DataFrame:
-    """Shared two-drop harness for both streaming SCD2 APIs: the events
-    fixture is split at its epoch midpoint into two time-ordered drops
-    drained through ONE checkpoint (two AvailableNow passes) — versions
-    opened by drop 1 and closed by drop 2 certify cross-micro-batch state
-    continuity, exactly the ``events_scd2_apply_late_batch`` split pushed
-    down into keyed state.  A far-future sentinel attribute closes every
-    real open version on the second pass; the sentinel's own versions stay
-    in state unemitted, and real last versions get their ``valid_to``
-    nulled back (they closed at the sentinel, not at real data).
-    """
-    from .incremental import _stream_partitions
+    from .scd2 import scd2_stream
 
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type"
@@ -471,32 +466,28 @@ def _scd2_drain(spark: SparkSession, sf_dir: str, stream_op) -> DataFrame:
         "event_id",
         "event_type",
     )
-    source = tempfile.mkdtemp(prefix="tds_stream_scd2_src_")
-    target = tempfile.mkdtemp(prefix="tds_stream_scd2_tgt_") + "/out"
-    checkpoint = tempfile.mkdtemp(prefix="tds_stream_scd2_ckpt_")
+    source = stage_dir("scd2_src")
+    target = os.path.join(stage_dir("scd2_tgt"), "out")
+    checkpoint = stage_dir("scd2_ckpt")
 
-    def drain() -> None:
+    def drain_source() -> None:
         stream = spark.readStream.schema(
             "user_id long, ts timestamp, event_id long, event_type string"
         ).json(source)
-        with _stream_partitions(spark):
-            q = (
-                stream_op(stream)
-                .writeStream.foreachBatch(_scd2_sink(target))
-                .option("checkpointLocation", checkpoint)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        drain(
+            scd2_stream(stream),
+            foreach_batch=batch_id_sink(target, lambda batch: batch),
+            checkpoint=checkpoint,
+        )
 
     fmt(ev.filter(F.col("ts").cast("long") < cutoff)).coalesce(1).write.mode(
         "append"
     ).json(source)
-    drain()
+    drain_source()
     fmt(
         ev.filter(F.col("ts").cast("long") >= cutoff).unionByName(sentinel)
     ).coalesce(1).write.mode("append").json(source)
-    drain()
+    drain_source()
 
     out = spark.read.parquet(target)
     sentinel_ts = F.lit("2030-01-01 00:00:00").cast("timestamp")
@@ -516,46 +507,6 @@ def _scd2_drain(spark: SparkSession, sf_dir: str, stream_op) -> DataFrame:
         )
         .orderBy("user_id", "version")
     )
-
-
-@register("streaming_scd2", oracle=_SCD2_STREAM_ORACLE)
-def streaming_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stateful streaming SCD2 on ``applyInPandasWithState`` (see
-    ``_scd2_drain`` for the two-drop cross-batch harness)."""
-    from .scd2 import scd2_stream
-
-    return _scd2_drain(spark, sf_dir, scd2_stream)
-
-
-def streaming_scd2_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME operator on Spark 4's ``transformWithStateInPandas``
-    (typed ValueState, RocksDB state-store provider) through the same
-    two-drop harness and batch oracle — certifying semantics across the
-    engine's stateful-API migration.
-
-    NOT in the registry: the TWS Python worker protocol needs
-    ``google.protobuf``, absent in this container (and installs are out of
-    scope), so an end-to-end run here dies in worker init
-    (STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE).  The processor is
-    certified by the shared-core equivalence unit test
-    (tests/test_streaming.py) and by the skipif-gated e2e test that runs
-    wherever protobuf exists.  The RocksDB provider conf is scoped to this
-    call and restored afterwards."""
-    from .scd2 import scd2_stream_tws
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        return _scd2_drain(spark, sf_dir, scd2_stream_tws)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 @register(
@@ -610,14 +561,9 @@ def streaming_seasonal_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     the detection itself.
     """
     from ..plans.traffic import rollup_traffic
-    from .incremental import (
-        _stream_partitions,
-        hourly_rollup_stream,
-        read_traffic_stream,
-    )
 
     raw = traffic_raw_from_events(load_table(spark, sf_dir, "events"))
-    staging = _stage_raw_json(raw, "tds_stream_anom_")
+    staging = _stage_raw_json(raw, "anom")
 
     # the stored historical profile (batch-derived static dimension)
     rolled = rollup_traffic(
@@ -656,17 +602,9 @@ def streaming_seasonal_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
             thr.alias("thr_sq"),
         )
     )
-    table = f"stream_anom_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        q = (
-            flagged.writeStream.format("memory")
-            .queryName(table)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(table).orderBy("SiteCode", "Location", "PeriodEnding")
+    return drain(flagged, output_mode="complete").orderBy(
+        "SiteCode", "Location", "PeriodEnding"
+    )
 
 
 @register(
@@ -705,9 +643,8 @@ def streaming_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id"
     )
-    staging = tempfile.mkdtemp(prefix="tds_stream_trend_")
+    staging = stage_dir("trend")
     events.coalesce(1).write.mode("append").parquet(staging)
-    table = f"stream_trend_{uuid.uuid4().hex[:8]}"
     stream = (
         spark.readStream.schema(events.schema)
         .parquet(staging)
@@ -715,15 +652,7 @@ def streaming_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "6 hours").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(table)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    drained = spark.table(table)
+    drained = drain(stream, output_mode="complete")
     from pyspark.sql.window import Window
 
     rnk_w = Window.partitionBy("w").orderBy(F.col("cnt").desc(), "user_id")
@@ -771,64 +700,29 @@ def streaming_cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
     profile = cusum_profile(events)
     types = sorted(profile["series"])
 
-    d0, d1 = events.agg(
-        F.min(F.col("ts").cast("date")), F.max(F.col("ts").cast("date"))
-    ).first()
-    n_days = (d1 - d0).days + 1
-    step = max(1, n_days // 3)
+    staging = stage_dir("cusum")
+    # Sentinels ride in tiny per-slice files that land AFTER their slice
+    # in mtime order — a sentinel-only micro-batch folds through the
+    # frontier just as well as an in-slice sentinel row.
+    d0, d1, step, staged = stage_day_slices(
+        events.withColumn("is_sentinel", F.lit(False)), "ts", staging
+    )
     bounds = [d0 + dt.timedelta(days=i * step) for i in range(3)] + [
         d1 + dt.timedelta(days=1)
     ]
+    import pandas as _pd
+    import pyarrow as _pa
 
-    staging = tempfile.mkdtemp(prefix="tds_stream_cusum_")
-    # ONE partitioned write job stages every slice (three separate
-    # filter+coalesce jobs measured 16 s of the 20 s lifecycle); sentinels
-    # ride in tiny per-slice files that land AFTER their slice in mtime
-    # order — a sentinel-only micro-batch folds through the frontier just
-    # as well as an in-slice sentinel row.
-    tmp = tempfile.mkdtemp(prefix="tds_cusum_slices_")
-    (
-        events.withColumn("is_sentinel", F.lit(False))
-        .withColumn(
-            "slice",
-            F.least(
-                F.floor(F.datediff(F.col("ts").cast("date"), F.lit(d0)) / step),
-                F.lit(2),
-            ),
-        )
-        .repartition("slice")
-        .write.partitionBy("slice")
-        .mode("overwrite")
-        .parquet(tmp)
-    )
-    sentinel_rows = []
-    for i in range(3):
-        hi = bounds[i + 1]
-        sentinel_ts = dt.datetime.combine(hi, dt.time()) - dt.timedelta(
-            seconds=1
-        )
-        sentinel_rows.append(
-            [(t, sentinel_ts, True) for t in types]
-        )
-    for i in range(3):
-        sdir = os.path.join(tmp, f"slice={i}")
-        if not os.path.isdir(sdir):
-            continue
+    for i in staged:
+        sentinel_ts = dt.datetime.combine(bounds[i + 1], dt.time())
+        sentinel_ts -= dt.timedelta(seconds=1)
         base = 1_700_000_000 + i * 10
-        for j, f in enumerate(sorted(os.listdir(sdir))):
-            if f.endswith(".parquet") and not f.startswith(("_", ".")):
-                dst = os.path.join(staging, f"slice-{i:03d}-{j:03d}.parquet")
-                shutil.copyfile(os.path.join(sdir, f), dst)
-                os.utime(dst, (base, base))
         # sentinel slice via driver-side pyarrow (r8): no Spark job at all
         # — a local-relation write was the dominant per-slice harness cost
-        import pandas as _pd
-        import pyarrow as _pa
-
         _write_sentinel_file(
             os.path.join(staging, f"slice-{i:03d}-sentinel.parquet"),
             _pd.DataFrame(
-                sentinel_rows[i],
+                [(t, sentinel_ts, True) for t in types],
                 columns=["event_type", "ts", "is_sentinel"],
             ),
             _pa.schema(
@@ -847,20 +741,7 @@ def streaming_cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(staging)
     )
-    table = f"stream_cusum_{uuid.uuid4().hex[:8]}"
-    from .incremental import _stream_partitions
-
-    with _stream_partitions(spark):  # O(series) keys — right-size state
-        q = (
-            cusum_stream(stream, profile)
-            .writeStream.format("memory")
-            .queryName(table)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(table).orderBy("event_type", "epoch_hour")
+    return drain(cusum_stream(stream, profile)).orderBy("event_type", "epoch_hour")
 
 
 @register(
@@ -890,8 +771,7 @@ def streaming_view_click_leftjoin(spark: SparkSession, sf_dir: str) -> DataFrame
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type"
     )
-    views_dir = tempfile.mkdtemp(prefix="tds_ssoj_views_")
-    clicks_dir = tempfile.mkdtemp(prefix="tds_ssoj_clicks_")
+    views_dir, clicks_dir = stage_dir("ssoj_views"), stage_dir("ssoj_clicks")
     max_ts = events.agg(F.max("ts")).first()[0]
     import datetime as dt
 
@@ -918,46 +798,16 @@ def streaming_view_click_leftjoin(spark: SparkSession, sf_dir: str) -> DataFrame
                 ]
             ),
         )
-    table = f"stream_ssoj_{uuid.uuid4().hex[:8]}"
-    left = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(views_dir)
-        .withWatermark("ts", "30 minutes")
-        .alias("l")
+    left = _join_side(spark, events.schema, views_dir, "l", max_files=1)
+    right = _join_side(spark, events.schema, clicks_dir, "r", max_files=1)
+    joined = left.join(right, _follows_within(10), "left_outer").select(
+        F.col("l.event_id").alias("view_id"),
+        F.col("r.event_id").alias("click_id"),
+        F.col("l.user_id").alias("user_id"),
+        F.col("l.ts").alias("view_ts"),
+        F.col("r.ts").alias("click_ts"),
     )
-    right = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(clicks_dir)
-        .withWatermark("ts", "30 minutes")
-        .alias("r")
-    )
-    join_expr = (
-        (F.col("l.user_id") == F.col("r.user_id"))
-        & (F.col("r.ts") >= F.col("l.ts"))
-        & (F.col("r.ts") <= F.col("l.ts") + F.expr("INTERVAL 10 MINUTES"))
-    )
-    from .incremental import _stream_partitions
-
-    with _stream_partitions(spark):
-        q = (
-            left.join(right, join_expr, "left_outer")
-            .select(
-                F.col("l.event_id").alias("view_id"),
-                F.col("r.event_id").alias("click_id"),
-                F.col("l.user_id").alias("user_id"),
-                F.col("l.ts").alias("view_ts"),
-                F.col("r.ts").alias("click_ts"),
-            )
-            .writeStream.format("memory")
-            .queryName(table)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(table).filter(F.col("view_id") != -1)
+    return drain(joined).filter(F.col("view_id") != -1)
 
 
 def _growth_oracle() -> str:
@@ -976,59 +826,17 @@ def streaming_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows run batch-side over the drained classifications.  Same
     oracle as the batch operator — the drained stream must reproduce the
     one-shot decomposition exactly."""
-    import datetime as dt
-
     from .growth import growth_stream
-    from .incremental import _stream_partitions
 
     events = load_table(spark, sf_dir, "events").select("user_id", "ts")
-    d0, d1 = events.agg(
-        F.min(F.col("ts").cast("date")), F.max(F.col("ts").cast("date"))
-    ).first()
-    n_days = (d1 - d0).days + 1
-    step = max(1, n_days // 3)
-    staging = tempfile.mkdtemp(prefix="tds_stream_growth_")
-    tmp = tempfile.mkdtemp(prefix="tds_growth_slices_")
-    (
-        events.withColumn(
-            "slice",
-            F.least(
-                F.floor(F.datediff(F.col("ts").cast("date"), F.lit(d0)) / step),
-                F.lit(2),
-            ),
-        )
-        .repartition("slice")
-        .write.partitionBy("slice")
-        .mode("overwrite")
-        .parquet(tmp)
-    )
-    for i in range(3):
-        sdir = os.path.join(tmp, f"slice={i}")
-        if not os.path.isdir(sdir):
-            continue
-        base = 1_700_000_000 + i * 10
-        for j, f in enumerate(sorted(os.listdir(sdir))):
-            if f.endswith(".parquet") and not f.startswith(("_", ".")):
-                dst = os.path.join(staging, f"slice-{i:03d}-{j:03d}.parquet")
-                shutil.copyfile(os.path.join(sdir, f), dst)
-                os.utime(dst, (base, base))
-    table = f"stream_growth_{uuid.uuid4().hex[:8]}"
+    staging = stage_dir("growth")
+    stage_day_slices(events, "ts", staging)
     stream = (
         spark.readStream.schema("user_id long, ts timestamp")
         .option("maxFilesPerTrigger", 1)
         .parquet(staging)
     )
-    with _stream_partitions(spark):
-        q = (
-            growth_stream(stream)
-            .writeStream.format("memory")
-            .queryName(table)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    drained = spark.table(table)
+    drained = drain(growth_stream(stream))
     classified = drained.groupBy("epoch_day").agg(
         F.count(F.lit(1)).alias("dau"),
         F.count(F.when(F.col("cls") == "new", 1)).alias("new_users"),
@@ -1091,12 +899,9 @@ def streaming_decayed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "user_id"
     )
-    from .incremental import _stream_partitions
-
     d0 = events.agg(F.min(F.col("ts").cast("date"))).first()[0]
-    staging = tempfile.mkdtemp(prefix="tds_stream_decay_")
+    staging = stage_dir("decay")
     events.repartition(3).write.mode("append").parquet(staging)
-    table = f"stream_decay_{uuid.uuid4().hex[:8]}"
     stream = (
         spark.readStream.schema(events.schema)
         .option("maxFilesPerTrigger", 1)
@@ -1113,22 +918,14 @@ def streaming_decayed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "user_id")
         .agg(F.sum("w").alias("decayed_scaled"))
     )
-    with _stream_partitions(spark):
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(table)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drained = drain(stream, output_mode="complete")
     from pyspark.sql.window import Window
 
     rnk_w = Window.partitionBy("event_type").orderBy(
         F.col("decayed_scaled").desc(), "user_id"
     )
     return (
-        spark.table(table)
+        drained
         .withColumn("rnk", F.row_number().over(rnk_w))
         .filter(F.col("rnk") <= DECAYED_TOP_K)
         .select("event_type", "user_id", "decayed_scaled", "rnk")
@@ -1177,13 +974,10 @@ def streaming_versioned_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.floor(F.col("value") * 100).cast("long").alias("value_cents"),
     )
-    staging = tempfile.mkdtemp(prefix="tds_stream_vers_src_")
+    staging = stage_dir("vers_src")
     events.repartition(3).write.mode("append").parquet(staging)
-    table = os.path.join(
-        tempfile.mkdtemp(prefix="tds_stream_vers_tbl_"), "t"
-    )
+    table = os.path.join(stage_dir("vers_tbl"), "t")
     os.makedirs(os.path.join(table, "data"), exist_ok=True)
-    checkpoint = tempfile.mkdtemp(prefix="tds_stream_vers_ckpt_")
 
     def commit_batch(batch_df, batch_id):
         if batch_df.isEmpty():
@@ -1200,13 +994,7 @@ def streaming_versioned_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(staging)
     )
-    q = (
-        stream.writeStream.foreachBatch(commit_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, foreach_batch=commit_batch, checkpoint=stage_dir("vers_ckpt"))
     versions = table_versions(spark, table)
     assert len(versions) >= 3, versions
     # time travel to the first batch boundary still reads exactly batch 1
@@ -1260,7 +1048,6 @@ def streaming_interval_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch window algebra (same oracle as ``events_interval_islands``).
     Drain: pyarrow far-future sentinel + paired slices + the final
     timeout sweep — the streaming_contribution_cap harness shape."""
-    from .incremental import STREAM_SHUFFLE_PARTITIONS, _stream_partitions
     from .islands import islands_stream
 
     events = load_table(spark, sf_dir, "events")
@@ -1273,37 +1060,8 @@ def streaming_interval_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("end"),
         "event_id",
     )
-    d0, d1 = iv.agg(
-        F.min(F.col("start").cast("date")), F.max(F.col("start").cast("date"))
-    ).first()
-    step = max(1, ((d1 - d0).days + 1) // 3)
-    staging = tempfile.mkdtemp(prefix="tds_stream_isl_")
-    tmp = tempfile.mkdtemp(prefix="tds_isl_slices_")
-    (
-        iv.withColumn(
-            "slice",
-            F.least(
-                F.floor(
-                    F.datediff(F.col("start").cast("date"), F.lit(d0)) / step
-                ),
-                F.lit(2),
-            ),
-        )
-        .repartition("slice")
-        .write.partitionBy("slice")
-        .mode("overwrite")
-        .parquet(tmp)
-    )
-    for i in range(3):
-        sdir = os.path.join(tmp, f"slice={i}")
-        if not os.path.isdir(sdir):
-            continue
-        base = 1_700_000_000 + i * 10
-        for j, f in enumerate(sorted(os.listdir(sdir))):
-            if f.endswith(".parquet") and not f.startswith(("_", ".")):
-                dst = os.path.join(staging, f"slice-{i:03d}-{j:03d}.parquet")
-                shutil.copyfile(os.path.join(sdir, f), dst)
-                os.utime(dst, (base, base))
+    staging = stage_dir("isl")
+    stage_day_slices(iv, "start", staging)
     import pandas as _pd
     import pyarrow as _pa
 
@@ -1327,7 +1085,6 @@ def streaming_interval_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         mtime=1_700_000_100,
     )
-    table = f"stream_isl_{uuid.uuid4().hex[:8]}"
     stream = (
         spark.readStream.schema(
             "user_id long, start timestamp, end timestamp, event_id long"
@@ -1335,18 +1092,11 @@ def streaming_interval_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 2)
         .parquet(staging)
     )
-    with _stream_partitions(spark, n=max(32, STREAM_SHUFFLE_PARTITIONS)):
-        q = (
-            islands_stream(stream, lateness="90 days")
-            .writeStream.format("memory")
-            .queryName(table)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
-        spark.table(table)
+        drain(
+            islands_stream(stream, lateness="90 days"),
+            partitions=max(32, STREAM_SHUFFLE_PARTITIONS),
+        )
         .select(
             "user_id",
             F.timestamp_micros("start_us").alias("island_start"),
@@ -1381,44 +1131,13 @@ def streaming_contribution_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     buffers; the drained admitted set must equal the batch operator's
     earliest-N selection (same window oracle).  The out-of-order slice
     permutation is pinned by ``tests/test_streaming.py``."""
-    import datetime as dt
-
     from .cap import cap_stream
-    from .incremental import _stream_partitions
 
     events = load_table(spark, sf_dir, "events").select(
         "event_type", "user_id", "ts", "event_id"
     )
-    d0, d1 = events.agg(
-        F.min(F.col("ts").cast("date")), F.max(F.col("ts").cast("date"))
-    ).first()
-    n_days = (d1 - d0).days + 1
-    step = max(1, n_days // 3)
-    staging = tempfile.mkdtemp(prefix="tds_stream_cap_")
-    tmp = tempfile.mkdtemp(prefix="tds_cap_slices_")
-    (
-        events.withColumn(
-            "slice",
-            F.least(
-                F.floor(F.datediff(F.col("ts").cast("date"), F.lit(d0)) / step),
-                F.lit(2),
-            ),
-        )
-        .repartition("slice")
-        .write.partitionBy("slice")
-        .mode("overwrite")
-        .parquet(tmp)
-    )
-    for i in range(3):
-        sdir = os.path.join(tmp, f"slice={i}")
-        if not os.path.isdir(sdir):
-            continue
-        base = 1_700_000_000 + i * 10
-        for j, f in enumerate(sorted(os.listdir(sdir))):
-            if f.endswith(".parquet") and not f.startswith(("_", ".")):
-                dst = os.path.join(staging, f"slice-{i:03d}-{j:03d}.parquet")
-                shutil.copyfile(os.path.join(sdir, f), dst)
-                os.utime(dst, (base, base))
+    staging = stage_dir("cap")
+    stage_day_slices(events, "ts", staging)
     # Drain sentinel (cap.py contract): ONE far-future row pushes the
     # watermark past every real ts after its batch; the buffered tails
     # then flush through the EventTimeTimeout sweep (the engine's final
@@ -1449,7 +1168,6 @@ def streaming_contribution_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         mtime=1_700_000_100,
     )
-    table = f"stream_cap_{uuid.uuid4().hex[:8]}"
     stream = (
         spark.readStream.schema(
             "event_type string, user_id long, ts timestamp, event_id long"
@@ -1469,25 +1187,16 @@ def streaming_contribution_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # this drain keyed-Python-invocation-bound, and 8 partitions cap the
     # parallel Arrow workers at 8 — the r7 sweep measured 24.4 s at 8 vs
     # 12.6 s at 32 for this lifecycle at sf0.1.
-    from .incremental import STREAM_SHUFFLE_PARTITIONS
-
-    with _stream_partitions(spark, n=max(32, STREAM_SHUFFLE_PARTITIONS)):
-        q = (
-            # lateness spans the whole fixture (30 days of events), so ANY
-            # slice permutation is within tolerance — nothing drops late.
-            # (An r8 experiment with lateness=1 day to seal progressively
-            # made the drain SLOWER — 34.6 s vs 27.9 s same-host: early
-            # sealing fires every key's timer in every batch, and keyed
-            # invocation count, not buffered-state size, is the cost.)
-            cap_stream(stream, cap=5, lateness="90 days")
-            .writeStream.format("memory")
-            .queryName(table)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(table).orderBy("event_type", "user_id", "event_id")
+    # Lateness spans the whole fixture (30 days of events), so ANY slice
+    # permutation is within tolerance — nothing drops late.  (An r8
+    # experiment with lateness=1 day to seal progressively made the drain
+    # SLOWER — 34.6 s vs 27.9 s same-host: early sealing fires every key's
+    # timer in every batch, and keyed invocation count, not buffered-state
+    # size, is the cost.)
+    return drain(
+        cap_stream(stream, cap=5, lateness="90 days"),
+        partitions=max(32, STREAM_SHUFFLE_PARTITIONS),
+    ).orderBy("event_type", "user_id", "event_id")
 
 
 def _write_sentinel_file(
@@ -1601,12 +1310,11 @@ def streaming_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         F.floor(F.col("o_totalprice") * 100).cast("long").alias("price_cents"),
     )
-    staging = tempfile.mkdtemp(prefix="tds_smv_src_")
+    staging = stage_dir("smv_src")
     orders.repartition(3).write.mode("append").parquet(staging)
-    table = os.path.join(tempfile.mkdtemp(prefix="tds_smv_tbl_"), "t")
+    table = os.path.join(stage_dir("smv_tbl"), "t")
     os.makedirs(os.path.join(table, "data"), exist_ok=True)
-    mv_dir = tempfile.mkdtemp(prefix="tds_smv_mv_")
-    checkpoint = tempfile.mkdtemp(prefix="tds_smv_ckpt_")
+    mv_dir = stage_dir("smv_mv")
 
     def _refresh(sess, to_version: int) -> None:
         cur = mv_committed_version(mv_dir)
@@ -1660,13 +1368,9 @@ def streaming_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(staging)
     )
-    q = (
-        stream.writeStream.foreachBatch(commit_and_refresh)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        stream, foreach_batch=commit_and_refresh, checkpoint=stage_dir("smv_ckpt")
     )
-    q.awaitTermination()
     final = mv_committed_version(mv_dir)
     assert final >= 3  # one commit+refresh per file drop
     return spark.read.parquet(_mv_version_path(mv_dir, final)).orderBy(
@@ -1717,7 +1421,7 @@ def streaming_ohlc_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
     )
-    staging = tempfile.mkdtemp(prefix="tds_stream_ohlc_")
+    staging = stage_dir("ohlc")
     for parity in (0, 1):
         events.filter(F.col("event_id") % 2 == parity).coalesce(1).write.mode(
             "append"
@@ -1753,19 +1457,7 @@ def streaming_ohlc_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
             "volume",
         )
     )
-    table = f"stream_ohlc_{uuid.uuid4().hex[:8]}"
-    from .incremental import _stream_partitions
-
-    with _stream_partitions(spark):
-        q = (
-            bars.writeStream.format("memory")
-            .queryName(table)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(table)
+    return drain(bars, output_mode="complete")
 
 
 @register(
@@ -1833,8 +1525,8 @@ def streaming_merge_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    source = tempfile.mkdtemp(prefix="tds_stream_cdf_src_")
-    root = tempfile.mkdtemp(prefix="tds_stream_cdf_")
+    source = stage_dir("cdf_src")
+    root = stage_dir("cdf")
     target = os.path.join(root, "target")
     feed = os.path.join(root, "feed")
     checkpoint = os.path.join(root, "ckpt")
@@ -1852,25 +1544,22 @@ def streaming_merge_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         merged = merge_with_tombstones(tgt, batch_df, ["o_orderkey"])
         merged.write.mode("overwrite").parquet(target)
 
-    def drain():
-        q = (
+    def drain_source():
+        drain(
             spark.readStream.schema(
                 "o_orderkey long, o_custkey long, o_orderstatus string, "
                 "is_delete boolean"
             )
             .option("maxFilesPerTrigger", 1)
-            .parquet(source)
-            .writeStream.foreachBatch(apply_and_feed)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
+            .parquet(source),
+            foreach_batch=apply_and_feed,
+            checkpoint=checkpoint,
         )
-        q.awaitTermination()
 
     b0.coalesce(1).write.mode("append").parquet(source)
-    drain()
+    drain_source()
     b1.coalesce(1).write.mode("append").parquet(source)
-    drain()
+    drain_source()
 
     return spark.read.parquet(feed).orderBy(
         "_batch_id", "o_orderkey", "_change_type"
@@ -1930,10 +1619,9 @@ def streaming_quantile_sketch_estimates(
     )
 
     events = load_table(spark, sf_dir, "events").select("event_id", "value")
-    staging = tempfile.mkdtemp(prefix="tds_stream_qsk_src_")
+    staging = stage_dir("qsk_src")
     events.repartition(3).write.mode("append").parquet(staging)
-    store = tempfile.mkdtemp(prefix="tds_stream_qsk_store_")
-    checkpoint = tempfile.mkdtemp(prefix="tds_stream_qsk_ckpt_")
+    store = stage_dir("qsk_store")
 
     def append_sketch(batch_df, batch_id):
         if batch_df.isEmpty():
@@ -1948,13 +1636,7 @@ def streaming_quantile_sketch_estimates(
         .option("maxFilesPerTrigger", 1)
         .parquet(staging)
     )
-    q = (
-        stream.writeStream.foreachBatch(append_sketch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, foreach_batch=append_sketch, checkpoint=stage_dir("qsk_ckpt"))
     rows = [
         (r.part_id, r.v, r.rmin, r.rmax, r.n_part)
         for r in spark.read.parquet(store).collect()
@@ -1999,8 +1681,7 @@ def streaming_view_click_fulljoin(spark: SparkSession, sf_dir: str) -> DataFrame
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type"
     )
-    views_dir = tempfile.mkdtemp(prefix="tds_ssfj_views_")
-    clicks_dir = tempfile.mkdtemp(prefix="tds_ssfj_clicks_")
+    views_dir, clicks_dir = stage_dir("ssfj_views"), stage_dir("ssfj_clicks")
     max_ts = events.agg(F.max("ts")).first()[0]
     import datetime as dt
 
@@ -2027,49 +1708,17 @@ def streaming_view_click_fulljoin(spark: SparkSession, sf_dir: str) -> DataFrame
                 ]
             ),
         )
-    table = f"stream_ssfj_{uuid.uuid4().hex[:8]}"
-    left = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(views_dir)
-        .withWatermark("ts", "30 minutes")
-        .alias("l")
+    left = _join_side(spark, events.schema, views_dir, "l", max_files=1)
+    right = _join_side(spark, events.schema, clicks_dir, "r", max_files=1)
+    joined = left.join(right, _follows_within(10), "full_outer").select(
+        F.col("l.event_id").alias("view_id"),
+        F.col("r.event_id").alias("click_id"),
+        F.coalesce(F.col("l.user_id"), F.col("r.user_id")).alias("user_id"),
+        F.col("l.ts").alias("view_ts"),
+        F.col("r.ts").alias("click_ts"),
     )
-    right = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(clicks_dir)
-        .withWatermark("ts", "30 minutes")
-        .alias("r")
-    )
-    join_expr = (
-        (F.col("l.user_id") == F.col("r.user_id"))
-        & (F.col("r.ts") >= F.col("l.ts"))
-        & (F.col("r.ts") <= F.col("l.ts") + F.expr("INTERVAL 10 MINUTES"))
-    )
-    from .incremental import _stream_partitions
-
-    with _stream_partitions(spark):
-        q = (
-            left.join(right, join_expr, "full_outer")
-            .select(
-                F.col("l.event_id").alias("view_id"),
-                F.col("r.event_id").alias("click_id"),
-                F.coalesce(F.col("l.user_id"), F.col("r.user_id")).alias(
-                    "user_id"
-                ),
-                F.col("l.ts").alias("view_ts"),
-                F.col("r.ts").alias("click_ts"),
-            )
-            .writeStream.format("memory")
-            .queryName(table)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
-        spark.table(table)
+        drain(joined)
         .filter(F.col("user_id") != -1)
         .orderBy("view_id", "click_id")
     )
@@ -2094,10 +1743,9 @@ def streaming_percolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.retrieval import percolate
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    staging = tempfile.mkdtemp(prefix="tds_stream_perc_src_")
+    staging = stage_dir("perc_src")
     docs.repartition(3).write.mode("append").parquet(staging)
-    sink = tempfile.mkdtemp(prefix="tds_stream_perc_sink_")
-    checkpoint = tempfile.mkdtemp(prefix="tds_stream_perc_ckpt_")
+    sink = stage_dir("perc_sink")
 
     def match_batch(batch_df, _batch_id):
         if batch_df.isEmpty():
@@ -2109,13 +1757,7 @@ def streaming_percolate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(staging)
     )
-    q = (
-        stream.writeStream.foreachBatch(match_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, foreach_batch=match_batch, checkpoint=stage_dir("perc_ckpt"))
     return spark.read.parquet(sink).orderBy("query_id", "doc_id")
 
 
@@ -2159,10 +1801,9 @@ def streaming_catalog_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         F.floor(F.col("value") * 100).cast("long").alias("cents"),
     )
-    staging = tempfile.mkdtemp(prefix="tds_stream_cat_src_")
+    staging = stage_dir("cat_src")
     events.repartition(3).write.mode("append").parquet(staging)
-    root = tempfile.mkdtemp(prefix="tds_stream_cat_root_")
-    checkpoint = tempfile.mkdtemp(prefix="tds_stream_cat_ckpt_")
+    root = stage_dir("cat_root")
 
     def commit_batch(batch_df, batch_id):
         if batch_df.isEmpty():
@@ -2184,13 +1825,7 @@ def streaming_catalog_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(staging)
     )
-    q = (
-        stream.writeStream.foreachBatch(commit_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, foreach_batch=commit_batch, checkpoint=stage_dir("cat_ckpt"))
     history = catalog_history(spark, root)
     assert len(history) >= 3, [m["txn"] for m in history]
     cut = multi_table_read(spark, root)
@@ -2247,20 +1882,13 @@ def streaming_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type"
     )
-    views_dir = tempfile.mkdtemp(prefix="tds_ss_iv_views_")
-    pur_dir = tempfile.mkdtemp(prefix="tds_ss_iv_pur_")
+    views_dir, pur_dir = stage_dir("ss_iv_views"), stage_dir("ss_iv_pur")
     events.filter(F.col("event_type") == "view").coalesce(1).write.mode(
         "append"
     ).parquet(views_dir)
     events.filter(F.col("event_type") == "purchase").coalesce(1).write.mode(
         "append"
     ).parquet(pur_dir)
-    table = f"stream_ivoverlap_{uuid.uuid4().hex[:8]}"
-    join_expr = (
-        (F.col("l.user_id") == F.col("r.user_id"))
-        & (F.col("r.ts") >= F.col("l.ts"))
-        & (F.col("r.ts") <= F.col("l.ts") + F.expr("INTERVAL 35 MINUTES"))
-    )
     overlap_us = F.least(
         F.unix_micros(F.col("l.ts")) + F.lit(300_000_000),
         F.unix_micros(F.col("r.ts")),
@@ -2268,14 +1896,15 @@ def streaming_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros(F.col("l.ts")),
         F.unix_micros(F.col("r.ts")) - F.lit(1_800_000_000),
     )
-    select_cols = [
-        F.col("l.user_id").alias("user_id"),
-        F.col("l.event_id").alias("view_id"),
-        F.col("r.event_id").alias("purchase_id"),
-        overlap_us.alias("overlap_us"),
-    ]
-    return run_stream_stream_join_to_memory(
-        spark, views_dir, pur_dir, table, events.schema, join_expr, select_cols
+    left = _join_side(spark, events.schema, views_dir, "l")
+    right = _join_side(spark, events.schema, pur_dir, "r")
+    return drain(
+        left.join(right, _follows_within(35)).select(
+            F.col("l.user_id").alias("user_id"),
+            F.col("l.event_id").alias("view_id"),
+            F.col("r.event_id").alias("purchase_id"),
+            overlap_us.alias("overlap_us"),
+        )
     )
 
 
@@ -2323,7 +1952,6 @@ def streaming_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle).  Dyadic α/β keep the stateful Python fold and the SQL
     recursion on identical IEEE ops."""
     from .holt import holt_stream
-    from .incremental import STREAM_SHUFFLE_PARTITIONS, _stream_partitions
 
     events = load_table(spark, sf_dir, "events")
     rows = events.select(
@@ -2332,37 +1960,8 @@ def streaming_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         F.floor(F.col("value") * 100).cast("long").alias("cents"),
     )
-    d0, d1 = rows.agg(
-        F.min(F.col("ts").cast("date")), F.max(F.col("ts").cast("date"))
-    ).first()
-    step = max(1, ((d1 - d0).days + 1) // 3)
-    staging = tempfile.mkdtemp(prefix="tds_stream_holt_")
-    tmp = tempfile.mkdtemp(prefix="tds_holt_slices_")
-    (
-        rows.withColumn(
-            "slice",
-            F.least(
-                F.floor(
-                    F.datediff(F.col("ts").cast("date"), F.lit(d0)) / step
-                ),
-                F.lit(2),
-            ),
-        )
-        .repartition("slice")
-        .write.partitionBy("slice")
-        .mode("overwrite")
-        .parquet(tmp)
-    )
-    for i in range(3):
-        sdir = os.path.join(tmp, f"slice={i}")
-        if not os.path.isdir(sdir):
-            continue
-        base = 1_700_000_000 + i * 10
-        for j, f in enumerate(sorted(os.listdir(sdir))):
-            if f.endswith(".parquet") and not f.startswith(("_", ".")):
-                dst = os.path.join(staging, f"slice-{i:03d}-{j:03d}.parquet")
-                shutil.copyfile(os.path.join(sdir, f), dst)
-                os.utime(dst, (base, base))
+    staging = stage_dir("holt")
+    d0, d1, _, _ = stage_day_slices(rows, "ts", staging)
     import pandas as _pd
     import pyarrow as _pa
 
@@ -2386,7 +1985,6 @@ def streaming_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         mtime=1_700_000_100,
     )
-    table = f"stream_holt_{uuid.uuid4().hex[:8]}"
     stream = (
         spark.readStream.schema(
             "user_id long, ts timestamp, event_id long, cents long"
@@ -2398,18 +1996,11 @@ def streaming_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     # micro-batches, so a fixed "90 days" would silently watermark-drop
     # rows if the events table ever spanned longer (ADVICE r09 #4).
     lateness_days = (d1 - d0).days + 2
-    with _stream_partitions(spark, n=max(32, STREAM_SHUFFLE_PARTITIONS)):
-        q = (
-            holt_stream(stream, lateness=f"{lateness_days} days")
-            .writeStream.format("memory")
-            .queryName(table)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
-        spark.table(table)
+        drain(
+            holt_stream(stream, lateness=f"{lateness_days} days"),
+            partitions=max(32, STREAM_SHUFFLE_PARTITIONS),
+        )
         .select(
             "user_id",
             "rn",
@@ -2459,41 +2050,27 @@ def streaming_misra_gries_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes the exact top-k and expects both guarantee
     booleans TRUE after the stream is drained."""
     from ..operators.freq import MG_K, merge_mg_partials, misra_gries_partials
-    from .incremental import STREAM_SHUFFLE_PARTITIONS, _stream_partitions
 
     events = load_table(spark, sf_dir, "events").select("event_id", "user_id")
-    staging = tempfile.mkdtemp(prefix="tds_stream_mg_src_")
+    staging = stage_dir("mg_src")
     events.repartition(6).write.mode("append").parquet(staging)
-    store = tempfile.mkdtemp(prefix="tds_stream_mg_store_")
-    checkpoint = tempfile.mkdtemp(prefix="tds_stream_mg_ckpt_")
-
-    def append_partials(batch_df, batch_id):
-        # Idempotent replay (ADVICE r10 #1): a micro-batch replayed after a
-        # task failure / checkpoint restart re-OVERWRITES its own
-        # ``batch_id=N`` subdir instead of appending a second copy of the
-        # partials — double-counted partials could push the folded estimate
-        # ABOVE the exact count and flip the mg_le_exact certificate.  The
-        # hive-style subdir is discovered as a partition column on read and
-        # ignored by the key-wise fold.
-        if batch_df.isEmpty():
-            return
-        misra_gries_partials(batch_df, "user_id", MG_K).write.mode(
-            "overwrite"
-        ).parquet(f"{store}/batch_id={batch_id}")
-
+    store = stage_dir("mg_store")
     stream = (
         spark.readStream.schema(events.schema)
         .option("maxFilesPerTrigger", 2)
         .parquet(staging)
     )
-    with _stream_partitions(spark, n=STREAM_SHUFFLE_PARTITIONS):
-        q = (
-            stream.writeStream.foreachBatch(append_partials)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    # Idempotent replay (ADVICE r10 #1): double-counted partials could push
+    # the folded estimate ABOVE the exact count and flip the mg_le_exact
+    # certificate.  The batch_id partition column is ignored by the
+    # key-wise fold.
+    drain(
+        stream,
+        foreach_batch=batch_id_sink(
+            store, lambda batch: misra_gries_partials(batch, "user_id", MG_K)
+        ),
+        checkpoint=stage_dir("mg_ckpt"),
+    )
 
     summary = merge_mg_partials(
         spark.read.parquet(store).collect(), "user_id", MG_K
@@ -2576,26 +2153,14 @@ def streaming_slo_burn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type"
     )
-    staging = tempfile.mkdtemp(prefix="tds_stream_slo_src_")
+    staging = stage_dir("slo_src")
     events.repartition(6).write.mode("append").parquet(staging)
-    store = tempfile.mkdtemp(prefix="tds_stream_slo_store_")
-    checkpoint = tempfile.mkdtemp(prefix="tds_stream_slo_ckpt_")
+    store = stage_dir("slo_store")
 
-    from .incremental import STREAM_SHUFFLE_PARTITIONS, _stream_partitions
-
-    def append_partials(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
-        (
-            batch_df.groupBy(F.date_trunc("hour", "ts").alias("h"))
-            .agg(
-                F.count(F.lit(1)).alias("n_total"),
-                F.count(
-                    F.when(F.col("event_type") == "error", 1)
-                ).alias("n_err"),
-            )
-            .write.mode("overwrite")
-            .parquet(f"{store}/batch_id={batch_id}")
+    def partials(batch_df):
+        return batch_df.groupBy(F.date_trunc("hour", "ts").alias("h")).agg(
+            F.count(F.lit(1)).alias("n_total"),
+            F.count(F.when(F.col("event_type") == "error", 1)).alias("n_err"),
         )
 
     stream = (
@@ -2603,14 +2168,11 @@ def streaming_slo_burn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 2)
         .parquet(staging)
     )
-    with _stream_partitions(spark, n=STREAM_SHUFFLE_PARTITIONS):
-        q = (
-            stream.writeStream.foreachBatch(append_partials)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        stream,
+        foreach_batch=batch_id_sink(store, partials),
+        checkpoint=stage_dir("slo_ckpt"),
+    )
 
     hourly = (
         spark.read.parquet(store)
@@ -2656,36 +2218,28 @@ def streaming_fd_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     core the batch profiler uses.  Counts are mergeable summaries, so
     the audit row is batch-split-invariant — stream == batch oracle."""
     from ..operators.quality import fd_audit_from_counts
-    from .incremental import STREAM_SHUFFLE_PARTITIONS, _stream_partitions
 
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type"
     )
-    staging = tempfile.mkdtemp(prefix="tds_stream_fd_src_")
+    staging = stage_dir("fd_src")
     events.repartition(6).write.mode("append").parquet(staging)
-    store = tempfile.mkdtemp(prefix="tds_stream_fd_store_")
-    checkpoint = tempfile.mkdtemp(prefix="tds_stream_fd_ckpt_")
-
-    def append_partials(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
-        batch_df.groupBy("user_id", "event_type").agg(
-            F.count(F.lit(1)).alias("c")
-        ).write.mode("overwrite").parquet(f"{store}/batch_id={batch_id}")
-
+    store = stage_dir("fd_store")
     stream = (
         spark.readStream.schema(events.schema)
         .option("maxFilesPerTrigger", 2)
         .parquet(staging)
     )
-    with _stream_partitions(spark, n=STREAM_SHUFFLE_PARTITIONS):
-        q = (
-            stream.writeStream.foreachBatch(append_partials)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        stream,
+        foreach_batch=batch_id_sink(
+            store,
+            lambda batch: batch.groupBy("user_id", "event_type").agg(
+                F.count(F.lit(1)).alias("c")
+            ),
+        ),
+        checkpoint=stage_dir("fd_ckpt"),
+    )
 
     folded = (
         spark.read.parquet(store)
@@ -2720,37 +2274,24 @@ def streaming_classifier_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang"
     )
-    staging = tempfile.mkdtemp(prefix="tds_stream_auc_src_")
+    staging = stage_dir("auc_src")
     docs.repartition(6).write.mode("append").parquet(staging)
-    store = tempfile.mkdtemp(prefix="tds_stream_auc_store_")
-    checkpoint = tempfile.mkdtemp(prefix="tds_stream_auc_ckpt_")
-
-    from .incremental import STREAM_SHUFFLE_PARTITIONS, _stream_partitions
-
-    def append_partials(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
-        (
-            _scored_labeled(batch_df)
-            .groupBy("lang", "mw")
-            .agg(F.count(F.lit(1)).alias("cnt"), F.sum("y").alias("pos"))
-            .write.mode("overwrite")
-            .parquet(f"{store}/batch_id={batch_id}")
-        )
-
+    store = stage_dir("auc_store")
     stream = (
         spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 2)
         .parquet(staging)
     )
-    with _stream_partitions(spark, n=STREAM_SHUFFLE_PARTITIONS):
-        q = (
-            stream.writeStream.foreachBatch(append_partials)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        stream,
+        foreach_batch=batch_id_sink(
+            store,
+            lambda batch: _scored_labeled(batch)
+            .groupBy("lang", "mw")
+            .agg(F.count(F.lit(1)).alias("cnt"), F.sum("y").alias("pos")),
+        ),
+        checkpoint=stage_dir("auc_ckpt"),
+    )
 
     folded = (
         spark.read.parquet(store)
@@ -2776,18 +2317,13 @@ from ..operators.quantiles import _LOG2_HIST_ORACLE
 )
 def streaming_log2_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HDR histogram maintenance at ingest via stored bin partials."""
-    from .incremental import STREAM_SHUFFLE_PARTITIONS, _stream_partitions
-
     events = load_table(spark, sf_dir, "events").select("event_id", "value")
-    staging = tempfile.mkdtemp(prefix="tds_stream_l2h_src_")
+    staging = stage_dir("l2h_src")
     events.repartition(6).write.mode("append").parquet(staging)
-    store = tempfile.mkdtemp(prefix="tds_stream_l2h_store_")
-    checkpoint = tempfile.mkdtemp(prefix="tds_stream_l2h_ckpt_")
+    store = stage_dir("l2h_store")
 
-    def append_partials(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
-        (
+    def partials(batch_df):
+        return (
             batch_df.select(
                 F.floor(F.col("value") * 1000000.0 + F.lit(0.5))
                 .cast("long")
@@ -2797,8 +2333,6 @@ def streaming_log2_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.floor(F.log2("v_micro")).cast("long").alias("bin"))
             .groupBy("bin")
             .agg(F.count(F.lit(1)).alias("n"))
-            .write.mode("overwrite")
-            .parquet(f"{store}/batch_id={batch_id}")
         )
 
     stream = (
@@ -2806,14 +2340,11 @@ def streaming_log2_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 2)
         .parquet(staging)
     )
-    with _stream_partitions(spark, n=STREAM_SHUFFLE_PARTITIONS):
-        q = (
-            stream.writeStream.foreachBatch(append_partials)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        stream,
+        foreach_batch=batch_id_sink(store, partials),
+        checkpoint=stage_dir("l2h_ckpt"),
+    )
 
     folded = (
         spark.read.parquet(store)

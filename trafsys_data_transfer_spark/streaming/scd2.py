@@ -1,4 +1,4 @@
-"""Stateful streaming SCD Type-2 — both Spark stateful APIs.
+"""Stateful streaming SCD Type-2 on ``applyInPandasWithState``.
 
 The streaming twin of :func:`operators.scd.scd2_build`: per-key dimension
 state (current attribute, version, ``valid_from``) lives in the state
@@ -7,12 +7,6 @@ later event CLOSES it by carrying a different attribute.  The open
 version per key stays in state (checkpointed) — what an always-on
 pipeline wants; the registered query flushes real versions with a
 sentinel attribute so the drained output matches the batch oracle.
-
-Implemented on BOTH stateful APIs over one shared run-compression core:
-``applyInPandasWithState`` (the 3.x-era operator, opaque tuple state) and
-Spark 4's ``transformWithStateInPandas`` (typed state variables, RocksDB
-provider).  The registered queries certify both against the SAME batch
-oracle — the engine's semantics survive its own API migration.
 
 Assumes in-order arrival per key across micro-batches (the nightly
 time-ordered drop; the registered query stages two time-split drops
@@ -60,8 +54,8 @@ SCD2_STATE_SCHEMA = StructType(
 
 
 def _compress_runs(user_id, pdf_iter, stored):
-    """Shared core for both stateful APIs: compress one micro-batch of a
-    key's events into closed SCD2 versions.
+    """Compress one micro-batch of a key's events into closed SCD2
+    versions.
 
     Returns ``(emit, new_state)`` — ``emit`` a pandas DataFrame of closed
     versions (or None), ``new_state`` the (attr, version, from_us) tuple
@@ -143,57 +137,5 @@ def scd2_stream(events_stream: DataFrame) -> DataFrame:
             stateStructType=SCD2_STATE_SCHEMA,
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# The same operator on Spark 4's transformWithStateInPandas
-# ---------------------------------------------------------------------------
-
-try:  # PySpark >= 4.0; guarded so the module imports on older runtimes
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-except ImportError:  # pragma: no cover - environment is 4.1
-    StatefulProcessor = object  # type: ignore[assignment,misc]
-    StatefulProcessorHandle = None  # type: ignore[assignment,misc]
-
-
-class SCD2Processor(StatefulProcessor):
-    """``transformWithStateInPandas`` port — typed ValueState on the
-    RocksDB state-store provider instead of one opaque tuple; the
-    run-compression core is shared with ``_scd2_fn`` verbatim."""
-
-    def init(self, handle: "StatefulProcessorHandle") -> None:
-        self._cur = handle.getValueState(
-            "cur", "attr string, version long, from_us long"
-        )
-
-    def handleInputRows(self, key, rows, timerValues):
-        (user_id,) = key
-        emit, new_state = _compress_runs(user_id, rows, self._cur.get())
-        if new_state is not None:
-            self._cur.update(new_state)
-        if emit is not None:
-            yield emit
-
-    def close(self) -> None:
-        pass
-
-
-def scd2_stream_tws(events_stream: DataFrame) -> DataFrame:
-    """SCD2 closed versions via ``transformWithStateInPandas``.  Needs the
-    RocksDB state-store provider (set by the caller; see
-    ``queries.streaming_scd2_tws``)."""
-    return (
-        events_stream.select("user_id", "ts", "event_id", "event_type")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            SCD2Processor(),
-            outputStructType=SCD2_SCHEMA,
-            outputMode="append",
-            timeMode="none",
         )
     )
