@@ -17,6 +17,8 @@ from trafsys_data_transfer_spark.operators.merge import (
 )
 from trafsys_data_transfer_spark.schemas import TRAFFIC_PK, TRAFFIC_SCHEMA
 
+DAY1, DAY2 = dt.date(2024, 1, 1), dt.date(2024, 1, 2)
+
 
 def _df(spark, rows):
     def mk(site, loc, hour, ins, outs, internal=0):
@@ -83,12 +85,16 @@ def test_parquet_sink_partition_pruned_merge(spark, tmp_path):
     day1 = _df(spark, [("A", "door", 1, 10, 5)]).withColumn(
         "PeriodDate", F.col("PeriodEnding").cast("date")
     )
-    merge_upsert_parquet(spark, path, day1, TRAFFIC_PK, partition_col="PeriodDate")
+    merge_upsert_parquet(
+        spark, path, day1, TRAFFIC_PK, partition_col="PeriodDate", touched=[DAY1]
+    )
 
     day2_rows = _df(spark, [("A", "door", 2, 7, 7)]).withColumn(
         "PeriodDate", F.to_date(F.lit("2024-01-02"))
     )
-    merge_upsert_parquet(spark, path, day2_rows, TRAFFIC_PK, partition_col="PeriodDate")
+    merge_upsert_parquet(
+        spark, path, day2_rows, TRAFFIC_PK, partition_col="PeriodDate", touched=[DAY2]
+    )
 
     import os
 
@@ -97,7 +103,9 @@ def test_parquet_sink_partition_pruned_merge(spark, tmp_path):
     correction = _df(spark, [("A", "door", 2, 777, 8)]).withColumn(
         "PeriodDate", F.to_date(F.lit("2024-01-02"))
     )
-    merge_upsert_parquet(spark, path, correction, TRAFFIC_PK, partition_col="PeriodDate")
+    merge_upsert_parquet(
+        spark, path, correction, TRAFFIC_PK, partition_col="PeriodDate", touched=[DAY2]
+    )
 
     # day1 partition untouched byte-for-byte (same file listing)
     assert sorted(os.listdir(os.path.join(path, "PeriodDate=2024-01-01"))) == day1_files
@@ -186,8 +194,10 @@ def test_partition_overwrite_mode_not_leaked_to_session(spark, tmp_path):
     batch = _df(spark, [("A", "door", 1, 1, 1)]).withColumn(
         "PeriodDate", F.col("PeriodEnding").cast("date")
     )
-    merge_upsert_parquet(spark, path, batch, TRAFFIC_PK, partition_col="PeriodDate")
-    merge_upsert_parquet(spark, path, batch, TRAFFIC_PK, partition_col="PeriodDate")
+    for _ in range(2):
+        merge_upsert_parquet(
+            spark, path, batch, TRAFFIC_PK, partition_col="PeriodDate", touched=[DAY1]
+        )
     assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == before
 
 
@@ -249,3 +259,16 @@ def test_merge_cdf_replaying_feed_reproduces_merge(spark):
     assert {(r.k, r.v) for r in replayed.collect()} == {
         (r.k, r.v) for r in want.collect()
     }
+
+
+def test_partitioned_merge_requires_touched_partitions(spark, tmp_path):
+    """The partitioned sink does not probe the batch for its partitions;
+    a caller that names none is refused before anything is read."""
+    import pyspark.sql.functions as F
+
+    path = str(tmp_path / "target")
+    batch = _df(spark, [("A", "door", 1, 1, 1)]).withColumn(
+        "PeriodDate", F.col("PeriodEnding").cast("date")
+    )
+    with pytest.raises(ValueError, match="touched"):
+        merge_upsert_parquet(spark, path, batch, TRAFFIC_PK, partition_col="PeriodDate")

@@ -130,6 +130,161 @@ def test_empty_batch_advances_watermark_without_sink(spark, tmp_path):
     assert RunLog(spark, log_path).latest()["ToDate"] == "2024-01-31"
 
 
+def _files(path):
+    """Every file under ``path`` with its size and mtime."""
+    import os
+
+    paths = [os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs]
+    return {p: (os.stat(p).st_size, os.stat(p).st_mtime_ns) for p in paths}
+
+
+NIGHT1 = {
+    ("2024-01-31", "2024-01-31"): [
+        _raw("A", "door", "2024-01-31T10:00:00", 5, 1),
+        _raw("A", "door", "2024-01-31T11:00:00", 6, 2, internal=True),
+    ]
+}
+
+
+@pytest.mark.parametrize(
+    "bad",
+    [
+        _raw(None, "door", "2024-02-01T09:00:00", 3, 3),
+        _raw("B", "door", None, 3, 3),
+        _raw("B", "door", "not-a-timestamp", 3, 3),
+        _raw("B", "door", "2024-02-01T09:00:00", 3, -1),
+        _raw("B", "door", "2024-01-31T10:00:00", -4, 3),
+    ],
+    ids=["null_site", "null_period_ending", "unparseable_period_ending", "negative_outs", "negative_ins"],
+)
+def test_bad_batch_raises_before_merge_and_keeps_watermark(spark, tmp_path, bad):
+    """A batch with a null PK column or a negative count fails the quality
+    gate before the MERGE writes anything: the target's files and the run
+    log's latest row are unchanged, so the window is retried next run.  A
+    null ``PeriodEnding`` would otherwise land in a null ``PeriodDate``
+    partition; an unparseable one fails the parse under ANSI mode (and
+    parses to null, caught by the gate, without it)."""
+    from trafsys_data_transfer_spark.operators.observe import QualityViolation
+
+    expected = Exception if bad["PeriodEnding"] == "not-a-timestamp" else QualityViolation
+    target = str(tmp_path / "target")
+    log_path = str(tmp_path / "runlog")
+    run_pipeline(spark, _fetcher(spark, NIGHT1), target, log_path, today=TODAY)
+    files, latest = _files(target), RunLog(spark, log_path).latest()
+
+    window = ("2024-01-31", "2024-02-01")
+    good = _raw("A", "door", "2024-01-31T10:00:00", 50, 10)
+    fetch = _fetcher(spark, {window: [good, bad]})
+    with pytest.raises(expected):
+        run_pipeline(spark, fetch, target, log_path, today=TODAY + dt.timedelta(days=1))
+
+    assert _files(target) == files
+    assert RunLog(spark, log_path).latest() == latest
+
+
+def test_crash_after_merge_before_log_append_retries_idempotently(
+    spark, tmp_path, monkeypatch
+):
+    """A crash between the MERGE commit and the run-log append leaves the
+    watermark where it was; the retry re-fetches the same window and
+    re-MERGEs it, ending equal to one clean run with one log row."""
+    clean_target = str(tmp_path / "clean")
+    clean_log = str(tmp_path / "clean_log")
+    run_pipeline(spark, _fetcher(spark, NIGHT1), clean_target, clean_log, today=TODAY)
+
+    target = str(tmp_path / "target")
+    log_path = str(tmp_path / "runlog")
+    fetch = _fetcher(spark, NIGHT1)
+
+    def crash(self, run_info):
+        raise RuntimeError("injected crash before the run-log append")
+
+    with monkeypatch.context() as m:
+        m.setattr(RunLog, "append", crash)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            run_pipeline(spark, fetch, target, log_path, today=TODAY)
+    assert read_target(spark, target).count() == 2  # the MERGE did commit
+    assert RunLog(spark, log_path).latest() is None
+
+    info = run_pipeline(spark, fetch, target, log_path, today=TODAY)
+    assert (info["FromDate"], info["ToDate"], info["Records"]) == ("2024-01-31", "2024-01-31", 2)
+    cols = ["SiteCode", "Location", "PeriodEnding", "IsInternal", "Ins", "Outs"]
+    assert sorted(read_target(spark, target).select(cols).collect()) == sorted(
+        read_target(spark, clean_target).select(cols).collect()
+    )
+    assert spark.read.parquet(log_path).count() == 1
+
+
+def test_incremental_night_job_ceiling(spark, tmp_path):
+    """One incremental night launches at most 9 Spark jobs: the run-log
+    read, one grouped action over the persisted batch (count, touched
+    partitions and quality gates together), the MERGE and the run-log
+    append.  A second pass over the batch or a schema-inference job
+    would push it over."""
+    target = str(tmp_path / "target")
+    log_path = str(tmp_path / "runlog")
+    windows = dict(NIGHT1)
+    windows[("2024-01-31", "2024-02-01")] = [
+        _raw("A", "door", "2024-01-31T11:00:00", 60, 20),
+        _raw("B", "door", "2024-02-01T09:00:00", 3, 3),
+    ]
+    fetch = _fetcher(spark, windows)
+    run_pipeline(spark, fetch, target, log_path, today=TODAY)
+
+    sc = spark.sparkContext
+    group = "test_incremental_night_job_ceiling"
+    sc.setJobGroup(group, group)
+    try:
+        run_pipeline(spark, fetch, target, log_path, today=TODAY + dt.timedelta(days=1))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs <= 9, jobs
+
+
+@pytest.mark.parametrize(
+    "info",
+    [
+        {
+            "FromDate": "2024-01-30",
+            "ToDate": "2024-01-31",
+            "Records": 9696,
+            "AccessToken": "tok-123",
+            "AccessTokenExpiresAt": dt.datetime(2024, 2, 1, 6, 30, 15, 123456),
+            "createdAt": dt.datetime(2024, 1, 31, 23, 59, 59, 999999),
+        },
+        {
+            "FromDate": "2024-01-31",
+            "ToDate": "2024-01-31",
+            "Records": 0,
+            "AccessToken": None,
+            "AccessTokenExpiresAt": None,
+            "createdAt": dt.datetime(2024, 2, 1, 0, 0, 1),
+        },
+    ],
+    ids=["token", "no_token"],
+)
+def test_run_log_row_reads_back_as_created_dataframe_row(spark, tmp_path, info):
+    """The row ``RunLog.append`` writes reads back with the schema and
+    values of a ``createDataFrame`` row of ``RUN_LOG_SCHEMA`` (the format
+    existing run logs hold): naive timestamps keep their wall-clock value
+    and a missing token stays null."""
+    from trafsys_data_transfer_spark.schemas import RUN_LOG_SCHEMA
+
+    log_path, ref_path = str(tmp_path / "runlog"), str(tmp_path / "ref")
+    RunLog(spark, log_path).append(info)
+    spark.createDataFrame(
+        [{f.name: info.get(f.name) for f in RUN_LOG_SCHEMA.fields}], schema=RUN_LOG_SCHEMA
+    ).write.parquet(ref_path)
+
+    got, want = spark.read.parquet(log_path), spark.read.parquet(ref_path)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+    row = RunLog(spark, log_path).latest()
+    assert row.asDict() == {f.name: info[f.name] for f in RUN_LOG_SCHEMA.fields}
+
+
 def test_approx_percentile_within_tolerance_of_exact(spark, sf_dir):
     """The t-digest estimate must land near the exact percentile (the
     rows-only bench query's accuracy claim)."""

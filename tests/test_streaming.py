@@ -92,14 +92,7 @@ def test_crash_between_sink_and_offset_commit_replays_idempotently(spark):
     reference's core contract, script.js:182-215 + :54)."""
     import pytest
 
-    from pyspark.sql import functions as F
-
-    from trafsys_data_transfer_spark.operators.merge import (
-        dedupe_last_write,
-        merge_upsert_parquet,
-    )
-    from trafsys_data_transfer_spark.plans.pipeline import PARTITION_COL
-    from trafsys_data_transfer_spark.schemas import TRAFFIC_PK
+    from trafsys_data_transfer_spark.plans.pipeline import load_batch
 
     source = tempfile.mkdtemp(prefix="t_crash_src_")
     target = tempfile.mkdtemp(prefix="t_crash_tgt_") + "/target"
@@ -119,19 +112,7 @@ def test_crash_between_sink_and_offset_commit_replays_idempotently(spark):
     crashed = {"done": False}
 
     def merge_batch(batch, batch_id):
-        if batch.isEmpty():
-            return
-        updates = dedupe_last_write(
-            normalize_traffic(batch), keys=TRAFFIC_PK,
-            order_by=["Ins", "Outs", "IsInternal"],
-        )
-        merge_upsert_parquet(
-            batch.sparkSession,
-            target,
-            updates.withColumn(PARTITION_COL, F.col("PeriodEnding").cast("date")),
-            keys=TRAFFIC_PK,
-            partition_col=PARTITION_COL,
-        )
+        load_batch(batch.sparkSession, batch, target)
         if not crashed["done"]:
             crashed["done"] = True
             raise RuntimeError("injected crash after sink commit")

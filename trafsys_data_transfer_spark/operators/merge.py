@@ -19,9 +19,10 @@ Spark-first realisation:
   merge, write to a new directory, atomically swap.  Single-writer by
   design — the reference is a single nightly cron too (SURVEY.md §7.4).
   **Partition pruning**: the target is partitioned by ``PeriodDate`` and
-  only partitions present in the update batch are rewritten; untouched
-  dates are never read or rewritten, so a one-day delta against a
-  100 TB/10-year table touches ~0.03% of the data.
+  only the partitions present in the update batch (named by the caller)
+  are rewritten; untouched dates are never read or rewritten, so a
+  one-day delta against a 100 TB/10-year table touches ~0.03% of the
+  data.
 * For a transactional lakehouse table the same semantics are one
   statement — ``MERGE INTO target USING updates ON <pk> WHEN MATCHED
   THEN UPDATE SET Ins, Outs WHEN NOT MATCHED THEN INSERT *`` (Delta /
@@ -127,14 +128,25 @@ def merge_upsert_parquet(
     updates: DataFrame,
     keys: Sequence[str],
     partition_col: str | None = None,
+    touched: Sequence | None = None,
 ) -> None:
     """Idempotent parquet MERGE sink with partition-scoped rewrite.
 
-    When ``partition_col`` is set and the target exists, only the partition
-    values present in ``updates`` are read+merged+rewritten
-    (``INSERT OVERWRITE`` of touched partitions via dynamic partition
-    overwrite); everything else is untouched.  Without a partition column
-    the whole table is rewritten through an atomic directory swap.
+    When ``partition_col`` is set and the target exists, only the
+    ``touched`` partition values are read+merged+rewritten (``INSERT
+    OVERWRITE`` of those partitions via dynamic partition overwrite);
+    everything else is untouched.  ``touched`` must list every
+    ``partition_col`` value present in ``updates`` — the caller has it
+    from the action that already ran over the batch (the nightly loader's
+    grouped count), so the sink launches no probe job of its own.  A
+    value missing from ``touched`` would have its partition overwritten
+    with the batch's rows alone.  Without a partition column the whole
+    table is rewritten through an atomic directory swap.
+
+    ``updates`` is read twice (anti-join build side, union branch); a
+    caller whose batch is expensive to derive persists it first.  The
+    target is read with ``updates``' schema, so no job infers it from the
+    parquet footers: ``updates`` must carry every column of the target.
 
     Single-writer assumption documented in the module docstring.  All
     storage operations (existence probe, atomic swap) go through Hadoop's
@@ -144,8 +156,9 @@ def merge_upsert_parquet(
     night's batch.
     """
     keys = list(keys)
-    exists = path_exists(spark, target_path)
-    if not exists:
+    if partition_col and touched is None:
+        raise ValueError("a partitioned MERGE needs the touched partition values")
+    if not path_exists(spark, target_path):
         if partition_col:
             # Cluster by target partition on the CREATE path too — without
             # this the initial load writes |tasks|×|dates| sliver files and
@@ -157,39 +170,27 @@ def merge_upsert_parquet(
             updates.write.mode("overwrite").parquet(target_path)
         return
 
+    target = spark.read.schema(updates.schema).parquet(target_path)
     if partition_col:
-        # The update batch is read three times (touched-partition probe,
-        # anti-join build side, union branch) — materialize it once.  A
-        # nightly delta is small by construction; at 100 TB this is the
-        # classic cache-the-delta-not-the-table rule.
-        updates = updates.persist()
-        try:
-            # Source-side pruning: restrict the target scan to touched
-            # partitions.
-            touched = [
-                r[0] for r in updates.select(partition_col).distinct().collect()
-            ]
-            target = spark.read.parquet(target_path).filter(
-                F.col(partition_col).isin(touched)
-            )
-            merged = merge_dataframes(target, updates, keys)
-            # Cluster rows by their target partition before the write: each
-            # task then writes whole partitions instead of every task writing
-            # a sliver of every partition — at scale this is the difference
-            # between |tasks|×|dates| small files and |dates| right-sized
-            # ones.  partitionOverwriteMode is a per-write option (not a
-            # session conf): concurrent plans in the same session keep their
-            # own overwrite semantics.
-            merged.repartition(F.col(partition_col)).write.mode(
-                "overwrite"
-            ).option("partitionOverwriteMode", "dynamic").partitionBy(
-                partition_col
-            ).parquet(target_path)
-        finally:
-            updates.unpersist()
+        # Source-side pruning: restrict the target scan to touched
+        # partitions.
+        merged = merge_dataframes(
+            target.filter(F.col(partition_col).isin(list(touched))), updates, keys
+        )
+        # Cluster rows by their target partition before the write: each
+        # task then writes whole partitions instead of every task writing
+        # a sliver of every partition — at scale this is the difference
+        # between |tasks|×|dates| small files and |dates| right-sized
+        # ones.  partitionOverwriteMode is a per-write option (not a
+        # session conf): concurrent plans in the same session keep their
+        # own overwrite semantics.
+        merged.repartition(F.col(partition_col)).write.mode(
+            "overwrite"
+        ).option("partitionOverwriteMode", "dynamic").partitionBy(
+            partition_col
+        ).parquet(target_path)
         return
 
-    target = spark.read.parquet(target_path)
     merged = merge_dataframes(target, updates, keys)
     tmp = f"{target_path}.__merge_{uuid.uuid4().hex}"
     merged.write.mode("overwrite").parquet(tmp)

@@ -10,6 +10,12 @@ any action on the observed DataFrame.
     out, obs = observe_traffic_quality(normalized)
     sink(out)                        # one action, metrics collected inline
     assert_traffic_quality(obs.get)  # raises on violated invariants
+
+An observation's metrics arrive only after its action has run — after a
+sink has written.  The nightly loader (``plans.pipeline.load_batch``)
+must gate BEFORE its MERGE writes, so it puts the same
+:func:`traffic_quality_counts` into the grouped aggregate it already runs
+over the persisted batch.
 """
 
 from __future__ import annotations
@@ -35,15 +41,26 @@ def observe_traffic_quality(
     out = df.observe(
         obs,
         F.count(F.lit(1)).alias("n_rows"),
+        *traffic_quality_counts(),
+        F.max("PeriodEnding").alias("max_period_ending"),
+    )
+    return out, obs
+
+
+def traffic_quality_counts() -> list:
+    """The hard-invariant counts :func:`assert_traffic_quality` gates on,
+    as aggregate expressions: ``n_null_pk`` (a null ``SiteCode``,
+    ``Location`` or ``PeriodEnding``) and ``n_negative`` (a negative
+    ``Ins`` or ``Outs``).  They ride any ``agg``/``observe`` the caller
+    already runs."""
+    return [
         F.count_if(
             F.col("SiteCode").isNull()
             | F.col("Location").isNull()
             | F.col("PeriodEnding").isNull()
         ).alias("n_null_pk"),
         F.count_if((F.col("Ins") < 0) | (F.col("Outs") < 0)).alias("n_negative"),
-        F.max("PeriodEnding").alias("max_period_ending"),
-    )
-    return out, obs
+    ]
 
 
 def assert_traffic_quality(metrics: dict) -> dict:

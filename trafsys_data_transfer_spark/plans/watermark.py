@@ -17,6 +17,7 @@ from typing import Any
 
 from pyspark.sql import Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..fsutil import path_exists
 from ..schemas import RUN_LOG_SCHEMA
@@ -54,9 +55,21 @@ class RunLog:
         failed run's window retryable."""
         info = dict(run_info)
         info.setdefault("createdAt", dt.datetime.now(dt.timezone.utc).replace(tzinfo=None))
-        row = {f.name: info.get(f.name) for f in RUN_LOG_SCHEMA.fields}
-        df = self.spark.createDataFrame([row], schema=RUN_LOG_SCHEMA)
-        df.coalesce(1).write.mode("append").parquet(self.path)
+        # Literals over a one-partition range: the row is made on the JVM
+        # and needs no Python worker, which a list-backed createDataFrame
+        # starts for every write.  Timestamps go in as the schema's
+        # internal micros, so a naive datetime stores the value
+        # createDataFrame would store.
+        cols = []
+        for f in RUN_LOG_SCHEMA.fields:
+            v = f.dataType.toInternal(info.get(f.name))
+            if isinstance(f.dataType, T.TimestampType) and v is not None:
+                col = F.timestamp_micros(F.lit(v))
+            else:
+                col = F.lit(v).cast(f.dataType)
+            cols.append(col.alias(f.name))
+        row = self.spark.range(0, 1, 1, 1).select(*cols)
+        row.write.mode("append").parquet(self.path)
 
 
 def resolve_window(

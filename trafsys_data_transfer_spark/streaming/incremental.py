@@ -30,10 +30,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..fsutil import process_staging_dir
-from ..operators.merge import dedupe_last_write, merge_upsert_parquet
-from ..plans.pipeline import PARTITION_COL
+from ..plans.pipeline import load_batch
 from ..plans.traffic import normalize_traffic
-from ..schemas import TRAFFIC_PK, TRAFFIC_RAW_SCHEMA
+from ..schemas import TRAFFIC_RAW_SCHEMA
 
 
 #: State-store partition count for the engine's bounded stream drains.
@@ -277,8 +276,11 @@ def run_stream_merge(
     checkpoint_dir: str,
 ) -> None:
     """Drain ANY raw-traffic stream through the nightly MERGE sink: one
-    ``AvailableNow`` pass, each micro-batch normalized, deduped
-    last-write-wins and MERGEd into the partitioned parquet target.
+    ``AvailableNow`` pass, each micro-batch loaded by the nightly run's
+    :func:`~..plans.pipeline.load_batch` — normalized, deduped
+    last-write-wins, quality-gated and MERGEd into the partitioned parquet
+    target.  A violated gate fails the query before its offsets commit,
+    so the batch is retried by the next run, as a nightly window is.
 
     Source-agnostic on purpose — the file-landing stream
     (:func:`run_incremental_merge`) and the registered ``trafsys``
@@ -287,23 +289,11 @@ def run_stream_merge(
     is the same audited sink code whichever source feeds it.
     """
 
-    def _merge_batch(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return  # T5: empty-batch short-circuit (script.js:183)
-        updates = dedupe_last_write(
-            normalize_traffic(batch),
-            keys=TRAFFIC_PK,
-            order_by=["Ins", "Outs", "IsInternal"],
-        )
-        merge_upsert_parquet(
-            batch.sparkSession,
-            target_path,
-            updates.withColumn(PARTITION_COL, F.col("PeriodEnding").cast("date")),
-            keys=TRAFFIC_PK,
-            partition_col=PARTITION_COL,
-        )
-
-    drain(stream, foreach_batch=_merge_batch, checkpoint=checkpoint_dir)
+    drain(
+        stream,
+        foreach_batch=lambda batch, _: load_batch(batch.sparkSession, batch, target_path),
+        checkpoint=checkpoint_dir,
+    )
 
 
 def run_incremental_merge(
