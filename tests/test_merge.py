@@ -272,3 +272,39 @@ def test_partitioned_merge_requires_touched_partitions(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="touched"):
         merge_upsert_parquet(spark, path, batch, TRAFFIC_PK, partition_col="PeriodDate")
+
+
+def test_rewritten_partitions_keep_the_target_column_order(spark, tmp_path):
+    """Files of a partition the MERGE rewrites hold the same columns in
+    the same positions as files of a partition it creates (the key-first
+    order of the anti-join must not reach the files)."""
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "target"
+    for day, hour, ins in [(DAY1, 1, 10), (DAY1, 1, 11), (DAY2, 2, 7)]:
+        batch = _df(spark, [("A", "door", hour, ins, 5)]).withColumn(
+            "PeriodDate", F.lit(day)
+        )
+        merge_upsert_parquet(
+            spark, str(path), batch, TRAFFIC_PK, partition_col="PeriodDate", touched=[day]
+        )
+    want = [f.name for f in TRAFFIC_SCHEMA.fields]
+    files = sorted(path.glob("PeriodDate=*/*.parquet"))
+    assert {f.parent.name for f in files} == {"PeriodDate=2024-01-01", "PeriodDate=2024-01-02"}
+    for f in files:
+        assert pq.read_schema(f).names == want, f.parent.name
+    rewritten = pq.read_table(path / "PeriodDate=2024-01-01").to_pylist()
+    assert [(r["SiteCode"], r["Ins"]) for r in rewritten] == [("A", 11)]
+
+
+def test_merge_with_tombstones_keeps_the_target_column_order(spark):
+    from trafsys_data_transfer_spark.operators.merge import merge_with_tombstones
+
+    target = spark.createDataFrame([(1, "x", 2)], "v long, tag string, k long")
+    updates = spark.createDataFrame(
+        [(3, "y", 2, False), (4, "z", 5, True)], "v long, tag string, k long, is_delete boolean"
+    )
+    merged = merge_with_tombstones(target, updates, ["k"])
+    assert merged.columns == target.columns
+    merged = merge_dataframes(target, updates.drop("is_delete"), ["k"])
+    assert merged.columns == target.columns

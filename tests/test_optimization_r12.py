@@ -80,13 +80,14 @@ def test_sq8_stored_probe_bit_identical_to_inline(spark, sf_dir):
     assert stored == inline
 
 
-def test_components_canonical_e1_matches_union_find(spark):
+def test_components_canonical_e1_matches_union_find(spark, cc_paths):
     """r12 algebraic rewrite pin: connected_components' large-star output
     is deduped in its canonical (child, parent) direction only (the former
     symmetrization fed rows the small-star filter discarded).  Pin the
     full helper against a driver-side union-find ground truth on an
     adversarial mix: a long chain (worst case for contraction depth), a
-    clique, a star, singletons, reversed/duplicate edges."""
+    clique, a star, singletons, reversed/duplicate edges — on both the
+    driver finish and the distributed loop."""
     from trafsys_data_transfer_spark.operators.graph import connected_components
 
     chain = [(i, i + 1) for i in range(100, 140)]          # 41-node chain
@@ -111,11 +112,12 @@ def test_components_canonical_e1_matches_union_find(spark):
 
     nodes = spark.createDataFrame([(n,) for n in node_ids], "id long")
     e = spark.createDataFrame(edges, "src long, dst long")
-    got = sorted(
-        (r["id"], r["component"])
-        for r in connected_components(nodes, e).collect()
-    )
-    assert got == want
+    for _ in cc_paths():
+        got = sorted(
+            (r["id"], r["component"])
+            for r in connected_components(nodes, e).collect()
+        )
+        assert got == want
 
 
 def test_jl_certificate_string_matches_array_projection(spark, sf_dir):

@@ -1,7 +1,7 @@
-"""Rules the package source keeps: temp directories come only from the
-process-scoped staging dir in ``fsutil.py`` (removed at exit), and
-streaming queries are started and awaited only by the shared ``drain``
-helper in ``streaming/incremental.py``."""
+"""Rules the package source keeps: temp directories and staging paths come
+only from the process-scoped staging dir in ``fsutil.py`` (removed at
+exit), and streaming queries are started and awaited only by the shared
+``drain`` helper in ``streaming/incremental.py``."""
 
 from __future__ import annotations
 
@@ -20,6 +20,10 @@ def _files_using(needle: str, allowed: str) -> list[str]:
 
 def test_mkdtemp_only_in_fsutil():
     assert _files_using("tempfile.mkdtemp", "fsutil.py") == []
+
+
+def test_gettempdir_only_in_fsutil():
+    assert _files_using("gettempdir", "fsutil.py") == []
 
 
 def test_await_termination_only_in_drain():

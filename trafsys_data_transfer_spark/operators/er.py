@@ -301,9 +301,13 @@ def er_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     size, so downstream joins can re-key to golden ids.
 
     Plan shape: the match generation is er_fuzzy_matches' single
-    window; components is the bounded-round label propagation of
-    ``graph.connected_components``; survivorship is one groupBy plus a
-    component-keyed join back — O(entities) state, no quadratic stage.
+    window; ``graph.connected_components`` counts the symmetrized match
+    edges and, while they fit under the broadcast threshold (÷ 16 bytes
+    per edge), labels them on the driver and broadcasts the labels back
+    — a handful of build-time jobs instead of the star-contraction
+    loop's ~9 per round, which remains the path above the bound;
+    survivorship is one groupBy plus a component-keyed join back —
+    O(entities) state, no quadratic stage.
     The oracle recomputes the closure as a recursive CTE and the
     survivorship rule in SQL."""
     from .graph import connected_components

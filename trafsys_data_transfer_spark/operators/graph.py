@@ -6,21 +6,29 @@ documents into one cluster and elect a canonical keeper (A~B and B~C must
 put A and C in the same cluster even when A~C was never emitted as a pair).
 That closure is connected components.
 
-Spark-first realisation: **alternating large-star / small-star
-contraction** (the MapReduce-era scheme; see the
-:func:`connected_components` docstring for the per-round algebra and why
-it replaced the earlier min-label + pointer-jumping loop in round 7).
-Each round rewrites the edge set so every node points closer to its
-component's minimum id — large-star hangs every neighbor larger than the
-node off the node's current minimum, small-star contracts the rest —
-and terminates when the edge set reaches a fixed point (an edge-set
-stability probe, not a changed-label count).  O(log² n) rounds proven,
-single-digit in practice, and crucially O(log n)-ish even on long
-adversarially-ordered match chains where min-label propagation degrades
-to O(diameter).  Each round is equi-joins plus a groupBy-min, all
-key-partitioned; ``localCheckpoint`` truncates the plan between rounds so
-the DAG doesn't grow with iterations (on a cluster use ``checkpoint`` to
-HDFS/S3 for fault tolerance instead).
+Spark-first realisation, two paths chosen by edge count (see the
+:func:`connected_components` docstring):
+
+* **Distributed loop** — alternating large-star / small-star contraction
+  (Kiveris et al., *Connected Components in MapReduce and Beyond*, SoCC
+  2014).  Each round rewrites the edge set so every node points closer
+  to its component's minimum id — large-star hangs every neighbor larger
+  than the node off the node's current minimum, small-star contracts the
+  rest — and stops as soon as the edge set is a star forest rooted at
+  the component minima (one counting action per round, not a changed-
+  label count).  O(log² n) rounds proven, single-digit in practice, and
+  O(log n)-ish even on long adversarially-ordered match chains where
+  min-label propagation degrades to O(diameter).  Each round is
+  equi-joins plus a groupBy-min, all key-partitioned;
+  ``localCheckpoint`` truncates the plan between rounds so the DAG
+  doesn't grow with iterations (on a cluster use ``checkpoint`` to
+  HDFS/S3 for fault tolerance instead).
+* **Driver finish** — once the edge set has at most
+  ``autoBroadcastJoinThreshold / 16`` rows (two int64 columns: a
+  relation Spark would already ship through the driver), it is fetched
+  as Arrow, labelled exactly with numpy hook-and-compress, and joined
+  back as a broadcast relation.  On small graphs the loop costs its
+  fixed per-round overhead (checkpoint stages, planning), not its work.
 
 Scale shape: the edge set is LSH *candidate pairs* — orders of magnitude
 smaller than the corpus (near-dup density × n, not n²), so cost is
@@ -30,11 +38,92 @@ in practice.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 from ..registry import register
 from ..sources.fixtures import load_table
+
+#: Bytes one edge row takes on the driver: two int64 columns.
+EDGE_ROW_BYTES = 16
+
+
+def driver_edge_bound(spark: SparkSession) -> int:
+    """Largest edge count :func:`connected_components` finishes on the
+    driver: the session's ``spark.sql.autoBroadcastJoinThreshold`` in
+    bytes ÷ :data:`EDGE_ROW_BYTES` (4,194,304 edges at ``get_spark``'s
+    64 MB).  ``-1``, Spark's "never broadcast", gives a negative bound
+    that no edge count meets, which turns the driver finish off."""
+    threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    return int(threshold) // EDGE_ROW_BYTES
+
+
+def min_id_labels(u: np.ndarray, v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Exact connected components of the edge list ``(u[i], v[i])``:
+    ``(ids, labels)`` with ``labels[k]`` the minimum id connected to
+    ``ids[k]``, for every id that occurs in an edge.
+
+    Hook-and-compress over dense indices: ``np.unique`` sorts the ids, so
+    a smaller index is a smaller id.  Each round hooks the larger root of
+    every edge whose endpoints still sit in different trees onto the
+    smaller root (the smallest, when several edges hook one root), then
+    pointer-jumps every node to its root.  Pointers only ever go to a
+    smaller index, so no cycle forms, each tree's root is its minimum,
+    and every round with a crossing edge removes at least one root."""
+    ids, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
+    a, b = inv[: len(u)], inv[len(u) :]
+    parent = np.arange(len(ids))
+    while True:
+        ra, rb = parent[a], parent[b]
+        cross = ra != rb
+        if not cross.any():
+            return ids, ids[parent]
+        a, b, ra, rb = a[cross], b[cross], ra[cross], rb[cross]
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+        while True:
+            hop = parent[parent]
+            if np.array_equal(hop, parent):
+                break
+            parent = hop
+
+
+def _driver_labels(e: DataFrame) -> DataFrame:
+    """``(u, label)`` for every non-root node of the symmetric edge set
+    ``e``, computed on the driver; roots label themselves downstream.
+    One direction of each edge carries the connectivity, so only
+    ``u < v`` is fetched."""
+    half = e.filter(F.col("u") < F.col("v")).toArrow()
+    ids, labels = min_id_labels(
+        half.column("u").to_numpy(), half.column("v").to_numpy()
+    )
+    child = ids != labels
+    id_type = e.schema["u"].dataType
+    found = e.sparkSession.createDataFrame(
+        pa.table({"u": ids[child], "label": labels[child]})
+    )
+    return F.broadcast(
+        found.select(F.col("u").cast(id_type), F.col("label").cast(id_type))
+    )
+
+
+def _star_forest_violations(e: DataFrame) -> tuple[int, int]:
+    """``(violating nodes, |e|)`` of the symmetric edge set ``e`` in one
+    action.  A node violates when it has more than one smaller neighbour,
+    or both a smaller and a larger one.  Zero violations means every
+    node is either a root with only larger neighbours or a leaf whose
+    one neighbour is a root: a star forest rooted at the component
+    minima, which is the contraction loop's fixpoint."""
+    per_node = e.groupBy("u").agg(
+        F.sum((F.col("v") < F.col("u")).cast("long")).alias("down"),
+        F.max("v").alias("top"),
+        F.count(F.lit(1)).alias("deg"),
+    )
+    bad = (F.col("down") > 1) | ((F.col("down") == 1) & (F.col("top") > F.col("u")))
+    row = per_node.agg(F.sum(bad.cast("long")), F.sum("deg")).first()
+    return int(row[0] or 0), int(row[1] or 0)
 
 
 def connected_components(
@@ -52,31 +141,48 @@ def connected_components(
     documents are their own cluster); ``edges`` may be directed, sparse,
     and unsorted — it is symmetrized here.
 
-    Algorithm: alternating LARGE-STAR / SMALL-STAR contraction (the
-    MapReduce-era star-contraction scheme — O(log² n) rounds proven,
-    single-digit rounds in practice).  Chosen over min-label
-    propagation + pointer jumping after a round-7 profile showed the
-    min-label frontier advancing O(1) hops per round on long
-    sorted-neighborhood match chains (pointer jumps only shortcut paths
-    the min has already traversed, so adversarial id orderings degrade
-    to O(diameter) rounds — >100 on the sf0.1 ER graph, where
-    star-contraction converges in 6).
+    Two paths, chosen by the size of the current edge set against
+    :func:`driver_edge_bound` (``autoBroadcastJoinThreshold`` ÷ 16):
 
-    Per round (all joins on shrinking relations; no broadcast of
-    node-scale tables — the star maps are hash-joined and AQE splits
-    skew):
-    * large-star: every node's neighbors ABOVE it re-attach to its
-      current minimum — long chains fold in half;
-    * small-star: every node and its neighbors BELOW it re-attach to
-      the local minimum — stars flatten onto their roots.
-    Fixpoint (edge set stable) leaves each component as a star rooted
-    at its minimum id; labels read off as min(u, neighbors)."""
+    * the symmetrized edge set is counted first (the action that
+      materializes its checkpoint); at or under the bound, and with
+      integral ids, the **driver finish** fetches it as Arrow, labels it
+      exactly with :func:`min_id_labels` and joins the non-root labels
+      back to ``nodes`` as a broadcast relation;
+    * above the bound the **distributed loop** runs alternating
+      LARGE-STAR / SMALL-STAR contraction (O(log² n) rounds proven,
+      single-digit in practice).  Chosen over min-label propagation +
+      pointer jumping after a profile showed the min-label frontier
+      advancing O(1) hops per round on long sorted-neighborhood match
+      chains (>100 rounds on the sf0.1 ER graph, where star-contraction
+      converges in 6).  Per round (all joins on shrinking relations; no
+      broadcast of node-scale tables — the star maps are hash-joined and
+      AQE splits skew):
+
+      - large-star: every node's neighbors ABOVE it re-attach to its
+        current minimum — long chains fold in half;
+      - small-star: every node and its neighbors BELOW it re-attach to
+        the local minimum — stars flatten onto their roots.
+
+      One action per round counts the new edge set and its star-forest
+      violations (:func:`_star_forest_violations`).  Zero violations is
+      the fixpoint: each component is a star rooted at its minimum id,
+      and labels read off as min(u, neighbors).  A round that leaves at
+      most the bound hands the rest to the driver finish.
+
+    Both paths return the same rows with the same schema.  Hitting
+    ``max_iter`` above the bound raises ``RuntimeError``."""
     e = edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
     e = (
         e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .filter(F.col("u") != F.col("v"))
         .distinct()
         .localCheckpoint(eager=False)
+    )
+    bound = (
+        driver_edge_bound(e.sparkSession)
+        if isinstance(e.schema["u"].dataType, IntegralType)
+        else -1
     )
 
     def _sym(pairs: DataFrame) -> DataFrame:
@@ -87,9 +193,11 @@ def connected_components(
             .distinct()
         )
 
+    n_edges = e.count()
     converged = False
-    prev_sig = None
     for _ in range(max_iter):
+        if n_edges <= bound:
+            break
         # large-star: m(u) = min(u, min neighbor); (v, m) for v > u
         m = e.groupBy("u").agg(F.min("v").alias("mv")).select(
             "u", F.least("u", "mv").alias("m")
@@ -99,24 +207,11 @@ def connected_components(
             .join(m, "u")
             .select(F.col("v").alias("a"), F.col("m").alias("b"))
         )
-        # lazy checkpoint (r8): eager=True cost one materialization JOB
-        # per tier per round; eager=False folds the materialization into
-        # the round's signature action — same lineage truncation, ~2
-        # fewer job barriers per round (measured 11.3 -> 10.0 s on
-        # er_golden_record at sf0.1, same-host best-of-2).  (r11 note: an
-        # attempt to drop this checkpoint entirely and let e1's subtree
-        # ride e2's lineage measured consistently ~1.2-1.4× WORSE on
-        # er_golden_record in a paired A/B — the duplicated large-star
-        # join does not fully dedupe via ReuseExchange — so the
-        # per-tier checkpoint stays.)
-        # r12 (guide §2.3, interleaved A/B 7.45 → 6.62 s best-of-3 on
-        # er_golden_record, outputs bit-identical): big is already
-        # CANONICAL — b = least(u, min neighbor) ≤ u < v = a for every
-        # emitted pair — and the small-star step consumes only the
-        # v < u direction, so the former _sym(big) symmetrized 2×|big|
-        # rows through the distinct exchange only for the filter on the
-        # next line to discard half of them.  Dedup the canonical
-        # direction alone: same `down` relation, half the shuffle.
+        # big is canonical — b = least(u, min neighbor) ≤ u < v = a — and
+        # small-star consumes only that direction, so it is deduped as is.
+        # The lazy checkpoint stays: without it e1's subtree rides e2's
+        # lineage and the duplicated large-star join does not fully dedupe
+        # via ReuseExchange (measured 1.2-1.4× slower).
         e1 = (
             big.filter(F.col("a") != F.col("b"))
             .select(F.col("a").alias("u"), F.col("b").alias("v"))
@@ -124,51 +219,30 @@ def connected_components(
             .localCheckpoint(eager=False)
         )
         # small-star: m over the DOWN-neighborhood; (v, m) and (u, m)
-        down = e1
-        m2 = down.groupBy("u").agg(F.min("v").alias("m"))
-        small = down.join(m2, "u").select(
+        m2 = e1.groupBy("u").agg(F.min("v").alias("m"))
+        small = e1.join(m2, "u").select(
             F.col("v").alias("a"), F.col("m").alias("b")
         ).union(m2.select(F.col("u").alias("a"), F.col("m").alias("b")))
-        e2 = _sym(small).localCheckpoint(eager=False)
-        # Stability probe, two tiers: a per-round order-insensitive
-        # hash-sum signature (one cheap aggregate) pre-filters; only when
-        # consecutive signatures MATCH does the exact two-sided set
-        # comparison run — the hash never decides convergence by itself,
-        # it only skips the expensive exact check on rounds that are
-        # still visibly moving.
-        sig = e2.agg(
-            # decimal accumulator: ANSI mode faults a long-sum overflow
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
-            F.count(F.lit(1)),
-        ).first()
-        sig = (sig[0], sig[1])
-        # One-sided exact check suffices (r11): sig == prev_sig already
-        # proves |e2| == |e| (the signature carries the count), and both
-        # are distinct-ed sets, so e2 \ e = ∅ with equal cardinality ⇒
-        # e2 == e.  The former second exceptAll job re-proved the same
-        # fact from the other side.
-        if sig == prev_sig and e2.exceptAll(e).isEmpty():
-            e = e2
+        e = _sym(small).localCheckpoint(eager=False)
+        violations, n_edges = _star_forest_violations(e)
+        if violations == 0:
             converged = True
             break
-        if sig[1] == 0:  # empty edge set: all-singletons fixpoint
-            e = e2
-            converged = True
-            break
-        prev_sig = sig
-        e = e2
-    if not converged:
+    if converged:
+        # stars point children at the component minimum; isolated nodes
+        # (or nodes whose whole component contracted away) label themselves
+        root = e.groupBy("u").agg(F.min("v").alias("mv")).select(
+            "u", F.least("u", "mv").alias("label")
+        )
+    elif n_edges <= bound:
+        root = _driver_labels(e)
+    else:
         # An unconverged star forest is silently WRONG (components split);
         # fail loudly rather than hand back plausible-looking clusters.
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds; "
             "raise max_iter"
         )
-    # stars point children at the component minimum; isolated nodes (or
-    # nodes whose whole component contracted away) label themselves
-    root = e.groupBy("u").agg(F.min("v").alias("mv")).select(
-        "u", F.least("u", "mv").alias("label")
-    )
     labels = (
         nodes.select(F.col(id_col).alias("u"))
         .join(root, "u", "left")

@@ -26,7 +26,6 @@ from __future__ import annotations
 
 import math
 import os
-import tempfile
 import uuid
 from collections.abc import Sequence
 
@@ -309,9 +308,7 @@ def layout_partition_overwrite_restate(
             )
         )
 
-    target = os.path.join(
-        tempfile.gettempdir(), f"tds_part_overwrite_{uuid.uuid4().hex[:8]}"
-    )
+    target = process_staging_dir(f"part_overwrite_{uuid.uuid4().hex[:8]}")
     # initial nightly load: full history, partitioned by day
     daily(t).write.partitionBy("day").mode("overwrite").parquet(target)
     # correction arrives for Jan 15 onward: restate ONLY those partitions

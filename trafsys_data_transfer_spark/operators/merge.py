@@ -91,7 +91,11 @@ def merge_dataframes(
     """
     keys = list(keys)
     survivors = target.join(updates.select(*keys), on=keys, how="left_anti")
-    return survivors.unionByName(updates.select(*target.columns))
+    # The USING anti-join puts the keys first; written files keep the
+    # target's column order whether a partition is created or rewritten.
+    return survivors.unionByName(updates.select(*target.columns)).select(
+        *target.columns
+    )
 
 
 def merge_additive(
@@ -226,7 +230,9 @@ def merge_with_tombstones(
     keys = list(keys)
     survivors = target.join(updates.select(*keys), on=keys, how="left_anti")
     upserts = updates.filter(~F.col(delete_col)).drop(delete_col)
-    return survivors.unionByName(upserts.select(*target.columns))
+    return survivors.unionByName(upserts.select(*target.columns)).select(
+        *target.columns
+    )
 
 
 def merge_cdf(

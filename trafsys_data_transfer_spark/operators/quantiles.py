@@ -34,8 +34,6 @@ The reference has no statistics tier at all (script.js:1-268); this is
 from __future__ import annotations
 
 import math
-import os
-import tempfile
 import uuid
 from collections.abc import Iterator
 
@@ -44,6 +42,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..fsutil import process_staging_dir
 from ..registry import register
 from ..sources.fixtures import load_table
 
@@ -164,9 +163,7 @@ def quantile_sketch_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
     query wraps these in the rank-bracket certificate."""
     events = load_table(spark, sf_dir, "events")
     sk = build_partition_sketches(events, "value")
-    store = os.path.join(
-        tempfile.gettempdir(), f"tds_qsketch_{uuid.uuid4().hex[:8]}"
-    )
+    store = process_staging_dir(f"qsketch_{uuid.uuid4().hex[:8]}")
     sk.write.mode("overwrite").parquet(store)
     rows = [
         (r.part_id, r.v, r.rmin, r.rmax, r.n_part)

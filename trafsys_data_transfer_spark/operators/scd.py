@@ -304,8 +304,9 @@ def events_scd2_bitemporal(spark: SparkSession, sf_dir: str) -> DataFrame:
     valid time, no transaction time; this row composes both extensions.
     """
     import os as _os
-    import tempfile as _tf
     import uuid as _uuid
+
+    from ..fsutil import process_staging_dir
 
     from .timetravel import versioned_commit, versioned_read
 
@@ -316,9 +317,7 @@ def events_scd2_bitemporal(spark: SparkSession, sf_dir: str) -> DataFrame:
     tprobe = (int(lo) + int(hi)) // 2
     known_first = ev.filter(F.col("event_id") % 10 != 0)
 
-    table = _os.path.join(
-        _tf.gettempdir(), f"tds_bitemp_{_uuid.uuid4().hex[:8]}"
-    )
+    table = process_staging_dir(f"bitemp_{_uuid.uuid4().hex[:8]}")
     _os.makedirs(_os.path.join(table, "data"), exist_ok=True)
     v1 = versioned_commit(spark, scd2_build(known_first), table)
     v2 = versioned_commit(spark, scd2_build(ev), table, replace=True)

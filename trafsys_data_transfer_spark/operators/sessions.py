@@ -10,8 +10,6 @@ sessions — asserted in tests.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -295,8 +293,9 @@ def events_sessionize_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
     :func:`sessionize_incremental` — the result must hash-match the
     full-recompute oracle exactly (carried-session extension, gap
     boundary at the cutoff, and renumbering all bit-correct)."""
-    import tempfile as _tf
     import uuid as _uuid
+
+    from ..fsutil import process_staging_dir
 
     events = load_table(spark, sf_dir, "events")
     lo, hi = events.agg(
@@ -308,9 +307,7 @@ def events_sessionize_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
     # sessionize_incremental consumes three times (last-session election,
     # closed/carry split, renumbering offsets) and would otherwise recompute
     # the full-history window sort per consumer.
-    prior_path = os.path.join(
-        _tf.gettempdir(), f"tds_sess_prior_{_uuid.uuid4().hex[:8]}"
-    )
+    prior_path = process_staging_dir(f"sess_prior_{_uuid.uuid4().hex[:8]}")
     sessionize_batch(
         events.filter(F.col("ts").cast("long") < cutoff)
     ).write.mode("overwrite").parquet(prior_path)

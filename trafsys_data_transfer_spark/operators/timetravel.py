@@ -46,13 +46,12 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..fsutil import list_data_files, path_exists
+from ..fsutil import list_data_files, path_exists, process_staging_dir
 from ..registry import register
 from ..sources.fixtures import load_table
 
@@ -365,9 +364,7 @@ def timetravel_restate_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     cutoff_day = F.lit("2024-01-15").cast("date")
-    table = os.path.join(
-        tempfile.gettempdir(), f"tds_timetravel_{uuid.uuid4().hex[:8]}"
-    )
+    table = process_staging_dir(f"timetravel_{uuid.uuid4().hex[:8]}")
     os.makedirs(os.path.join(table, "data"), exist_ok=True)
 
     def routed(df: DataFrame) -> DataFrame:
@@ -459,9 +456,7 @@ def timetravel_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("Ins").cast("string").alias("content"),
         )
 
-    table = os.path.join(
-        tempfile.gettempdir(), f"tds_ttdiff_{uuid.uuid4().hex[:8]}"
-    )
+    table = process_staging_dir(f"ttdiff_{uuid.uuid4().hex[:8]}")
     os.makedirs(os.path.join(table, "data"), exist_ok=True)
 
     def routed(df: DataFrame) -> DataFrame:
@@ -695,7 +690,6 @@ def timetravel_rollback_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     count doubled — the bad deploy), RESTORE to v1 as v3, and read the
     latest: it must hash-match the original state, with v2 still
     present in history."""
-    import tempfile as _tf
 
     events = load_table(spark, sf_dir, "events")
     daily = (
@@ -714,9 +708,7 @@ def timetravel_rollback_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("SiteCode", "Location", "day")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    table = os.path.join(
-        _tf.gettempdir(), f"tds_ttrollback_{uuid.uuid4().hex[:8]}"
-    )
+    table = process_staging_dir(f"ttrollback_{uuid.uuid4().hex[:8]}")
     os.makedirs(os.path.join(table, "data"), exist_ok=True)
     versioned_commit(spark, daily, table)
     versioned_commit(
@@ -756,7 +748,6 @@ def timetravel_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     with schema merging: v1's rows surface with a null tag, v2's with
     theirs — and a pinned ``read(version=1)`` (asserted inline) still
     returns the original two-column schema, untouched by the evolution."""
-    import tempfile as _tf
 
     docs = load_table(spark, sf_dir, "documents")
     base = (
@@ -770,9 +761,7 @@ def timetravel_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_docs"))
         .withColumn("ingest_tag", F.lit("nightly"))
     )
-    table = os.path.join(
-        _tf.gettempdir(), f"tds_ttschema_{uuid.uuid4().hex[:8]}"
-    )
+    table = process_staging_dir(f"ttschema_{uuid.uuid4().hex[:8]}")
     os.makedirs(os.path.join(table, "data"), exist_ok=True)
     versioned_commit(spark, base, table)
     versioned_commit(spark, delta, table)  # append with the new column
@@ -803,15 +792,12 @@ def timetravel_compact_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     still hash-match the raw relation.  Inline assertions pin that v2
     stays readable and byte-stable after the compaction commit (mtime
     check) until vacuum retires it, and that the file count dropped."""
-    import tempfile as _tf
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.floor(F.col("o_totalprice") * 100).cast("long").alias("price_cents"),
     )
-    table = os.path.join(
-        _tf.gettempdir(), f"tds_ttcompact_{uuid.uuid4().hex[:8]}"
-    )
+    table = process_staging_dir(f"ttcompact_{uuid.uuid4().hex[:8]}")
     os.makedirs(os.path.join(table, "data"), exist_ok=True)
     versioned_commit(
         spark, orders.filter(F.col("o_orderkey") % 2 == 0).repartition(8), table
@@ -889,16 +875,13 @@ def mv_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     crashed refresh re-runs from the recorded version — the same
     watermark discipline as the reference's ToDate protocol,
     script.js:54, lifted to the storage tier)."""
-    import tempfile as _tf
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_custkey",
         F.floor(F.col("o_totalprice") * 100).cast("long").alias("price_cents"),
     )
-    table = os.path.join(
-        _tf.gettempdir(), f"tds_mvrefresh_{uuid.uuid4().hex[:8]}"
-    )
+    table = process_staging_dir(f"mvrefresh_{uuid.uuid4().hex[:8]}")
     os.makedirs(os.path.join(table, "data"), exist_ok=True)
     third = F.col("o_orderkey") % 3
     versioned_commit(spark, orders.filter(third == 0), table)
@@ -1000,9 +983,7 @@ def orders_merge_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("is_delete", F.lit(False))
         )
     )
-    table = os.path.join(
-        tempfile.gettempdir(), f"tds_mergecdf_{uuid.uuid4().hex[:8]}"
-    )
+    table = process_staging_dir(f"mergecdf_{uuid.uuid4().hex[:8]}")
     os.makedirs(os.path.join(table, "data"), exist_ok=True)
     v1 = versioned_commit(spark, base, table)
     merged = merge_with_tombstones(base, upd, ["o_orderkey"])
@@ -1167,7 +1148,6 @@ def timetravel_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFram
     Reference anchor: script.js:184-214 rewrites one flat Oracle table in
     place — no layout history at all; this is the §2.10 storage-tier
     extension where even the PARTITIONING is versioned."""
-    import tempfile as _tf
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -1175,9 +1155,7 @@ def timetravel_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFram
         "o_orderpriority",
         F.floor(F.col("o_totalprice") * 100).alias("price_cents"),
     )
-    table = os.path.join(
-        _tf.gettempdir(), f"tds_partevo_{uuid.uuid4().hex[:8]}"
-    )
+    table = process_staging_dir(f"partevo_{uuid.uuid4().hex[:8]}")
     os.makedirs(os.path.join(table, "data"), exist_ok=True)
     half = F.col("o_orderkey") % 2
     # spec 0: unpartitioned history
@@ -1291,14 +1269,11 @@ def timetravel_table_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     strict-hash-checkable against a literal oracle (r8; requires all
     three order statuses present — true at every fixture sf the gates
     run); the byte-accounting invariants are pytest-pinned."""
-    import tempfile as _tf
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus"
     )
-    table = os.path.join(
-        _tf.gettempdir(), f"tds_history_{uuid.uuid4().hex[:8]}"
-    )
+    table = process_staging_dir(f"history_{uuid.uuid4().hex[:8]}")
     os.makedirs(os.path.join(table, "data"), exist_ok=True)
     half = F.col("o_orderkey") % 2
     versioned_commit(spark, orders.filter(half == 0).coalesce(1), table)
@@ -1356,12 +1331,11 @@ def timetravel_vacuum_gc(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes all four from orders — a mismatch catches a wrong
     live-set computation, a manifest left behind, or a data file the
     sweep missed or over-deleted."""
-    import tempfile as _tf
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus"
     )
-    table = os.path.join(_tf.gettempdir(), f"tds_vacgc_{uuid.uuid4().hex[:8]}")
+    table = process_staging_dir(f"vacgc_{uuid.uuid4().hex[:8]}")
     os.makedirs(os.path.join(table, "data"), exist_ok=True)
     half = F.col("o_orderkey") % 2
     even = orders.filter(half == 0).coalesce(1)
@@ -1539,7 +1513,6 @@ def catalog_snapshot_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned orders cut (FK closure — torn reads break it); the oracle
     recomputes txn 1's content from scratch.  tests/test_timetravel.py
     adds crash-window invisibility and post-append stability."""
-    import tempfile as _tf
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority"
@@ -1550,9 +1523,7 @@ def catalog_snapshot_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
         ).alias("cents"),
     )
-    root = os.path.join(
-        _tf.gettempdir(), f"tds_catalog_{uuid.uuid4().hex[:8]}"
-    )
+    root = process_staging_dir(f"catalog_{uuid.uuid4().hex[:8]}")
     even_o, even_l = F.col("o_orderkey") % 2 == 0, F.col("l_orderkey") % 2 == 0
     t1 = multi_table_commit(
         spark,
@@ -1757,8 +1728,6 @@ def timetravel_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero-copy claim (the clone's data dir holds ONLY its own post-fork
     files) and isolation in both directions (source version count and
     rows unchanged after the clone's commit)."""
-    from ..fsutil import process_staging_dir
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.floor(F.col("o_totalprice") * 100).cast("long").alias("cents"),
@@ -1992,12 +1961,8 @@ def timetravel_branch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderkey", F.lit(origin).alias("origin"), "price_centi"
         )
 
-    main = os.path.join(
-        tempfile.gettempdir(), f"tds_branch_main_{uuid.uuid4().hex[:8]}"
-    )
-    br = os.path.join(
-        tempfile.gettempdir(), f"tds_branch_fork_{uuid.uuid4().hex[:8]}"
-    )
+    main = process_staging_dir(f"branch_main_{uuid.uuid4().hex[:8]}")
+    br = process_staging_dir(f"branch_fork_{uuid.uuid4().hex[:8]}")
     os.makedirs(os.path.join(main, "data"), exist_ok=True)
 
     versioned_commit(spark, slice_of("1-URGENT", "base"), main)

@@ -19,12 +19,12 @@ CSV/JSON at the edge"; this operator is the edge→lake normalizer.
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..fsutil import process_staging_dir
 from ..registry import register
 from .fixtures import load_table
 
@@ -49,9 +49,7 @@ def stage_federated_events(spark: SparkSession, sf_dir: str) -> str:
     Returns the staging root.  Timestamps serialize as ISO-8601 text in
     the CSV/JSON legs (the parquet leg keeps the native type)."""
     events = load_table(spark, sf_dir, "events")
-    root = os.path.join(
-        tempfile.gettempdir(), f"tds_fed_{uuid.uuid4().hex[:8]}"
-    )
+    root = process_staging_dir(f"fed_{uuid.uuid4().hex[:8]}")
     m = F.col("event_id") % 3
     # Pin the canonical column order before writing: the CSV leg's read
     # schema is positional, and upstream tables are not obligated to share
