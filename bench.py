@@ -105,8 +105,11 @@ WORK_IN_BUILD = {
     "sim_semantic_dedup_pipeline",
     "dedup_components",
     "dedup_neardup_pipeline",
+    "dedup_neardup_pipeline_portable",
     "dedup_incremental_neardup",
+    "dedup_incremental_neardup_portable",
     "pretrain_data_pipeline",
+    "pretrain_data_pipeline_portable",
     "events_heavy_hitters_cms",
     "events_misra_gries_topk",
     "docs_jsonl_ingest_quality",

@@ -11,7 +11,7 @@ from trafsys_data_transfer_spark.operators.dedup import (
     fingerprint,
     minhash_candidates,
     minhash_near_dups,
-    simhash_near_dups,
+    simhash_near_dups_multiprobe,
 )
 
 
@@ -114,7 +114,7 @@ def test_minhash_candidates_bounded(planted):
 def test_simhash_finds_exact_and_near(planted):
     pairs = {
         (r.id_a, r.id_b): r.hamming
-        for r in simhash_near_dups(planted, max_hamming=8).collect()
+        for r in simhash_near_dups_multiprobe(planted, max_hamming=8).collect()
     }
     assert pairs.get((0, 1)) == 0  # identical text → identical simhash
     assert (0, 2) in pairs  # one-word change → small hamming distance
@@ -228,12 +228,9 @@ def test_simhash_multiprobe_complete_recall_vs_exact_hamming(spark, sf_dir):
 
 
 def test_simhash_multiprobe_finds_prefix_blind_pair(spark):
-    """A pair whose differing bits all land in the TOP 16 bits is invisible
-    to the single-prefix probe but must be found by the multiprobe."""
-    from trafsys_data_transfer_spark.operators.dedup import (
-        simhash_near_dups_multiprobe,
-    )
-
+    """A pair whose differing bits may land anywhere — the top bits
+    included, where a single-prefix probe is blind — must be found by the
+    multiprobe."""
     base = WORDS * 3
     near = list(base)
     near[5] = "red"
@@ -394,38 +391,55 @@ def test_portable_hash60_matches_duckdb(spark):
         assert got[s] == want, (s, got[s], want)
 
 
-def test_portable_tiers_share_code_path_with_fast_tiers(planted):
-    """The portable (md5) and fast (xxhash64) tiers run the SAME banding /
-    blocking / verify code — on the planted corpus both must surface the
-    same verified near-dup pairs (hash choice shifts bucket keys, but the
-    planted dups are near-identical so every tier must find them)."""
-    from trafsys_data_transfer_spark.operators.dedup import (
-        portable_hash60,
-        simhash_near_dups_multiprobe,
-    )
-
-    fast = {
+def test_near_dup_tiers_find_planted_pairs(planted):
+    """The one-hash MinHash and SimHash tiers both surface the planted
+    near-identical pairs (J >= 0.9 planted, so recall is 1)."""
+    minhash = {
         (r.id_a, r.id_b)
         for r in minhash_near_dups(planted, threshold=0.5).collect()
     }
-    portable = {
-        (r.id_a, r.id_b)
-        for r in minhash_near_dups(
-            planted, threshold=0.5, hash_fn=portable_hash60
-        ).collect()
-    }
-    assert {(0, 1), (0, 2), (1, 2)} <= fast
-    assert fast == portable  # verified pairs: hash only affects recall,
-    # and at these similarities (J >= 0.9 planted) recall is 1 either way
+    assert {(0, 1), (0, 2), (1, 2)} <= minhash
 
-    sh_fast = {
+    simhash = {
         (r.id_a, r.id_b)
         for r in simhash_near_dups_multiprobe(planted, max_hamming=3).collect()
     }
-    sh_portable = {
-        (r.id_a, r.id_b)
-        for r in simhash_near_dups_multiprobe(
-            planted, max_hamming=3, hash_fn=portable_hash60
-        ).collect()
-    }
-    assert (0, 1) in sh_fast and (0, 1) in sh_portable
+    assert (0, 1) in simhash
+
+
+def _pair_docs(seed: int, n_pairs: int, n_tokens: int, shared: int, id0: int):
+    """``n_pairs`` document pairs of ``n_tokens`` distinct words each; the
+    two docs of a pair share their first ``shared`` words and nothing
+    else, so their 3-shingle Jaccard is
+    ``(shared - 2) / (2 * (n_tokens - 2) - (shared - 2))``."""
+    import random
+
+    rng = random.Random(seed)
+    pool = rng.sample(range(10**9), n_pairs * (2 * n_tokens - shared))
+    it = (f"w{x}" for x in pool)
+    rows = []
+    for i in range(n_pairs):
+        a = [next(it) for _ in range(n_tokens)]
+        b = a[:shared] + [next(it) for _ in range(n_tokens - shared)]
+        rows += [(id0 + 2 * i, " ".join(a)), (id0 + 2 * i + 1, " ".join(b))]
+    return rows
+
+
+def test_minhash_candidate_rate_follows_the_banding_s_curve(spark):
+    """16 bands x 4 rows: P(candidate) = 1 - (1 - J^4)^16, i.e. 0.98 at
+    J = 0.69 and 0.001 at J = 0.09.  Permutations that are not
+    independent (all picking nearly the same minimum shingle) flatten
+    this to P ~= J, which lets dissimilar pairs through and misses
+    similar ones."""
+    n_pairs, n_tokens = 200, 100
+    high = _pair_docs(1, n_pairs, n_tokens, 82, 0)          # J = 80/116
+    low = _pair_docs(2, n_pairs, n_tokens, 18, 2 * n_pairs)  # J = 16/180
+    docs = spark.createDataFrame(high + low, ["doc_id", "text"])
+    cands = {(r.id_a, r.id_b) for r in minhash_candidates(docs).collect()}
+
+    def rate(rows):
+        ids = [r[0] for r in rows[::2]]
+        return sum((i, i + 1) in cands for i in ids) / len(ids)
+
+    assert rate(high) >= 0.9, rate(high)
+    assert rate(low) <= 0.02, rate(low)

@@ -88,3 +88,32 @@ def test_unregistered_priority_name_warns_but_serves(monkeypatch):
     assert any("no_such_query" in str(w.message) for w in caught)
     assert "flagship_revenue_topk" in qs
     assert len(qs) == len(reg._PRIORITY) - 1
+
+
+#: Names that once ran an xxhash64 twin of a strict ``_portable`` tier;
+#: each now serves the ``_portable`` builder and oracle.
+_ONE_HASH_NAMES = (
+    "dedup_minhash_lsh",
+    "dedup_incremental_neardup",
+    "dedup_simhash",
+    "dedup_neardup_pipeline",
+    "pretrain_data_pipeline",
+    "text_winnow_candidates",
+    "text_decontaminate_fuzzy",
+)
+
+
+def test_near_dup_names_share_their_portable_builder_and_oracle():
+    qs = all_queries()
+    for name in _ONE_HASH_NAMES:
+        twin = qs[f"{name}_portable"]
+        assert qs[name].build is twin.build, name
+        assert qs[name].oracle is not None and qs[name].oracle == twin.oracle, name
+
+
+def test_rows_only_queries_are_the_two_without_a_sql_oracle():
+    qs = all_queries()
+    assert {n for n, s in qs.items() if s.oracle is None} == {
+        "multimodal_image_neardup",
+        "tokenizer_bpe_stats",
+    }

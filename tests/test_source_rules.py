@@ -1,7 +1,9 @@
 """Rules the package source keeps: temp directories and staging paths come
 only from the process-scoped staging dir in ``fsutil.py`` (removed at
 exit), and streaming queries are started and awaited only by the shared
-``drain`` helper in ``streaming/incremental.py``."""
+``drain`` helper in ``streaming/incremental.py``.  Near-dup candidate
+generation has one hash (``portable_hash60``), so no operator takes a
+hash-function parameter."""
 
 from __future__ import annotations
 
@@ -28,3 +30,7 @@ def test_gettempdir_only_in_fsutil():
 
 def test_await_termination_only_in_drain():
     assert _files_using("awaitTermination", "streaming/incremental.py") == []
+
+
+def test_no_hash_fn_parameter_in_package():
+    assert _files_using("hash_fn", "") == []

@@ -61,8 +61,8 @@ SHIFT = 10_000_000
 
 #: The heavy tier: every query path ≥ ~2 s wall at sf0.1 in the r12
 #: round-start clean bench, minus the bulk of the streaming-drain family
-#: (floor-audited separately by tools/stream_floor_probe.py at 10×; four
-#: representatives kept here for the scaling ratio).
+#: (its per-batch floor at 10× is recorded in OPTIMIZATION_r12.md item 8;
+#: four representatives kept here for the scaling ratio).
 HEAVY = (
     "pretrain_data_pipeline",
     "pretrain_data_pipeline_portable",

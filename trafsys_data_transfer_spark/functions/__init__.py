@@ -15,7 +15,10 @@ Text / hashing::
     shingles(tokens, n)      distinct word n-gram shingles
     jaccard(a, b)            exact Jaccard similarity of two array sets
     minhash_signature(sh)    k-wide MinHash signature (Arrow-vectorized)
-    simhash(tokens)          64-bit SimHash (Arrow-vectorized)
+    simhash(tokens)          60-bit SimHash (Arrow-vectorized)
+
+Both hash with ``portable_hash60`` (md5-derived), so DuckDB recomputes
+the same signatures.
 
 Vectors::
 

@@ -228,46 +228,6 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     return repetition_stats(docs).orderBy("doc_id")
 
 
-@register("text_decontaminate_fuzzy")  # rows-only: MinHash isn't ANSI-SQL
-def text_decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FUZZY benchmark decontamination: training documents that are
-    near-duplicates of an eval document (MinHash-LSH candidates, exact
-    Jaccard ≥ 0.7 verify) — the tier the exact n-gram overlap
-    (``text_decontaminate``) cannot see once an eval item has been
-    paraphrased, re-wrapped or lightly edited (the Llama-style MinHash
-    decontamination recipe).
-
-    Composes ``minhash_near_dups`` over the full corpus, then keeps only
-    pairs that CROSS the train/eval boundary — the banding, candidate
-    bounding and verify plan (and its scale posture) are exactly the
-    dedup family's; only the boundary filter and the flag orientation
-    (which side is the training doc) are new.
-
-    Output: one row per (train doc, matching eval doc) with the exact
-    Jaccard — downstream either drops the doc or audits the match.
-    """
-    from .dedup import minhash_near_dups
-
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_near_dups(docs, threshold=0.7)
-    src = docs.select("doc_id", F.col("source").isin(*EVAL_SOURCES).alias("is_eval"))
-    flagged = (
-        pairs.join(src.toDF("id_a", "eval_a"), "id_a")
-        .join(src.toDF("id_b", "eval_b"), "id_b")
-        .filter(F.col("eval_a") != F.col("eval_b"))
-        .select(
-            F.when(F.col("eval_a"), F.col("id_b"))
-            .otherwise(F.col("id_a"))
-            .alias("train_doc_id"),
-            F.when(F.col("eval_a"), F.col("id_a"))
-            .otherwise(F.col("id_b"))
-            .alias("eval_doc_id"),
-            F.round("jaccard", 6).alias("jaccard"),
-        )
-    )
-    return flagged.orderBy("train_doc_id", "eval_doc_id")
-
-
 _EVAL_IN_LIST = "(" + ", ".join(repr(s) for s in EVAL_SOURCES) + ")"
 
 
@@ -301,26 +261,36 @@ def _fuzzy_decontaminate_portable_oracle() -> str:
     """
 
 
-@register(
-    "text_decontaminate_fuzzy_portable",
-    oracle=_fuzzy_decontaminate_portable_oracle(),
-)
-def text_decontaminate_fuzzy_portable(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Strict tier of the fuzzy decontamination: MinHash banding runs on
-    ``portable_hash60`` so the oracle replays candidate generation, the
-    Jaccard ≥ 0.7 verify, and the train/eval boundary orientation
-    end-to-end in SQL.  Same plan as ``text_decontaminate_fuzzy`` via the
-    shared ``hash_fn`` code path; the xxhash64 tier remains the
-    production fast path."""
-    from .dedup import minhash_near_dups, portable_hash60
+_FUZZY_ORACLE = _fuzzy_decontaminate_portable_oracle()
+
+
+@register("text_decontaminate_fuzzy", oracle=_FUZZY_ORACLE)
+@register("text_decontaminate_fuzzy_portable", oracle=_FUZZY_ORACLE)
+def text_decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """FUZZY benchmark decontamination: training documents that are
+    near-duplicates of an eval document (MinHash-LSH candidates, exact
+    Jaccard ≥ 0.7 verify) — the tier the exact n-gram overlap
+    (``text_decontaminate``) cannot see once an eval item has been
+    paraphrased, re-wrapped or lightly edited (the Llama-style MinHash
+    decontamination recipe).
+
+    Composes ``minhash_near_dups`` over the full corpus, then keeps only
+    pairs that CROSS the train/eval boundary — the banding, candidate
+    bounding and verify plan (and its scale posture) are exactly the
+    dedup family's; only the boundary filter and the flag orientation
+    (which side is the training doc) are new.
+
+    Output: one row per (train doc, matching eval doc) with the exact
+    Jaccard — downstream either drops the doc or audits the match.  The
+    banding hashes with ``portable_hash60``, so the oracle replays
+    candidate generation, the Jaccard ≥ 0.7 verify and the train/eval
+    orientation end-to-end in SQL.  Registered under both names.
+    """
+    from .dedup import minhash_near_dups
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_near_dups(docs, threshold=0.7, hash_fn=portable_hash60)
-    src = docs.select(
-        "doc_id", F.col("source").isin(*EVAL_SOURCES).alias("is_eval")
-    )
+    pairs = minhash_near_dups(docs, threshold=0.7)
+    src = docs.select("doc_id", F.col("source").isin(*EVAL_SOURCES).alias("is_eval"))
     flagged = (
         pairs.join(src.toDF("id_a", "eval_a"), "id_a")
         .join(src.toDF("id_b", "eval_b"), "id_b")
@@ -336,3 +306,4 @@ def text_decontaminate_fuzzy_portable(
         )
     )
     return flagged.orderBy("train_doc_id", "eval_doc_id")
+

@@ -7,21 +7,20 @@ Five tiers, each the idiomatic Spark shape for its scale:
 * **Keyed latest** — windowed ``row_number`` (one shuffle on the key).
 * **Fingerprint** — md5 of normalised text, then exact dedup on the
   digest; narrow per-row hashing.
-* **MinHash + LSH** — shingle hashing JVM-side (``xxhash64`` in
-  codegen), the k-way min-reduction as an Arrow-vectorized Pandas UDF,
+* **MinHash + LSH** — shingle hashing JVM-side (:func:`portable_hash60`
+  in codegen), the k-way min-reduction as an Arrow-vectorized Pandas UDF,
   then banding → explode(b bands) → self-join on (band, band_hash) for
   candidates → exact-Jaccard verification on shingle sets.  The only
   shuffles are the band-bucket join and final distinct; signature cost
   is O(k·|shingles|) numpy per row, embarrassingly parallel.
-* **SimHash** — 64-bit per-row signature (token hashes JVM-side, bit
-  voting vectorized in numpy); near-dup buckets share signature
-  prefixes, verified by ``bit_count(xor)`` Hamming distance.
+* **SimHash** — 60-bit per-row signature (token hashes JVM-side, bit
+  voting vectorized in numpy); near-dup buckets share a signature
+  block, verified by ``bit_count(xor)`` Hamming distance.
 
-All hashing is ``xxhash64`` with fixed seeds/constants → deterministic
-across runs and executors.  Every hash site also accepts
-:func:`portable_hash60` (md5-derived, engine-portable) so the
-``*_portable`` strict tiers can be replayed end-to-end by the DuckDB
-oracle — same code path, different hash.
+Candidate generation hashes with :func:`portable_hash60` only
+(md5-derived, fixed constants): deterministic across runs and
+executors, and identical in DuckDB, so every near-dup tier's strict
+oracle replays banding/blocking end-to-end — not just the verify stage.
 """
 
 from __future__ import annotations
@@ -81,10 +80,12 @@ def portable_hash60(col: Column) -> Column:
     hex chars of ``md5`` parsed as an integer.  Spark: ``conv(substring(
     md5(s), 18, 15), 16, 10)``; DuckDB: ``('0x' || substr(md5(s), 18,
     15))::BIGINT``.  15 hex chars = 60 bits < 2^63, so the signed cast is
-    exact on both engines.  ~3× slower per call than ``xxhash64`` (both
-    JVM codegen) — the price of a FULLY SQL-replayable strict oracle for
-    the MinHash/SimHash tiers; the xxhash64 default stays the production
-    path."""
+    exact on both engines.  The one hash of every near-dup candidate
+    generator (MinHash shingles and band keys, SimHash tokens,
+    winnowing tokens), so each tier is FULLY SQL-replayable by its strict
+    oracle.  Per call it costs more than ``xxhash64``, yet those queries
+    measured no slower with it at 1× (BENCH_r12) and within ±10% either
+    way at 10× (BENCH_HEAVY10X c8/c32)."""
     return F.conv(F.substring(F.md5(col.cast("string")), 18, 15), 16, 10).cast(
         "long"
     )
@@ -110,14 +111,19 @@ MINHASH_K = 64
 LSH_BANDS = 16
 LSH_ROWS = MINHASH_K // LSH_BANDS
 
-#: Fixed multipliers/offsets for the k hash functions (seeded, stable).
-#: Bounded to 30 bits and applied to a 32-bit-reduced base hash so
-#: a*h+b < 2^62 — ANSI mode (Spark 4 default) rejects long overflow, so
-#: the classic wraparound trick is off the table.
+#: The k permutations are the Carter–Wegman 2-universal family
+#: ``h_i(x) = (a_i·x + b_i) mod p`` over the prime p = 2^31−1, with
+#: ``x = portable_hash60 mod p``, ``a_i ∈ [1, p)`` and ``b_i ∈ [0, p)``
+#: (seeded, stable).  Every operand is below 2^31, so a·x+b < 2^62: no
+#: long overflow, which ANSI mode (Spark 4 default) and DuckDB reject.
+#: Multipliers and modulus must share the prime: with multipliers far
+#: below the modulus, a·x+b wraps at most once, the k "permutations"
+#: keep nearly the same order and pick the same minimum shingle, and
+#: P(candidate) falls to ≈ J instead of the banded S-curve.
+MINHASH_P = (1 << 31) - 1
 _rng = random.Random(42)
-MINHASH_A = tuple(_rng.randrange(1, 2**30) | 1 for _ in range(MINHASH_K))
-MINHASH_B = tuple(_rng.randrange(0, 2**30) for _ in range(MINHASH_K))
-_MERSENNE61 = (1 << 61) - 1
+MINHASH_A = tuple(_rng.randrange(1, MINHASH_P) for _ in range(MINHASH_K))
+MINHASH_B = tuple(_rng.randrange(0, MINHASH_P) for _ in range(MINHASH_K))
 
 
 def shingles(tokens: Column, n: int = 3) -> Column:
@@ -136,44 +142,42 @@ _B_NP = np.array(MINHASH_B, dtype=np.uint64)
 
 @pandas_udf(ArrayType(LongType()))
 def _minhash_from_hashes(hashes: pd.Series) -> pd.Series:
-    """Vectorized MinHash: given each row's shingle xxhash64 values, compute
-    the k-wide signature sig[i] = min over shingles of
-    ``(A[i]*h32 + B[i]) mod M61`` (h32 = low 32 bits).  The k×m reduction is
-    one numpy broadcast per row — Arrow batches keep Python overhead
-    per-batch, not per-row.  a<2^30 and h32<2^32 keep a*h32+b < 2^62, so
-    uint64 arithmetic is exact (no wraparound)."""
-    m61 = np.uint64(_MERSENNE61)
-    mask32 = np.uint64(0xFFFFFFFF)
+    """Vectorized MinHash: given each row's shingle hashes, compute the
+    k-wide signature sig[i] = min over shingles of
+    ``(A[i]*x + B[i]) mod p`` with ``x = h mod p`` (see ``MINHASH_P``).
+    The k×m reduction is one numpy broadcast per row — Arrow batches keep
+    Python overhead per-batch, not per-row.  Every operand is < 2^31, so
+    a*x+b < 2^62 and uint64 arithmetic is exact (no wraparound)."""
+    p = np.uint64(MINHASH_P)
     out = []
     for h in hashes:
         if h is None or len(h) == 0:
             out.append(np.zeros(MINHASH_K, dtype=np.int64))
             continue
-        h32 = np.asarray(h, dtype=np.int64).astype(np.uint64) & mask32
-        sig = (_A_NP[:, None] * h32[None, :] + _B_NP[:, None]) % m61
+        x = np.asarray(h, dtype=np.int64).astype(np.uint64) % p
+        sig = (_A_NP[:, None] * x[None, :] + _B_NP[:, None]) % p
         out.append(sig.min(axis=1).astype(np.int64))
     return pd.Series(out)
 
 
-def minhash_signature(sh: Column, hash_fn=F.xxhash64) -> Column:
+def minhash_signature(sh: Column) -> Column:
     """k-wide MinHash signature per row.  Shingle hashing stays JVM-side
-    (``hash_fn`` inside codegen — ``xxhash64`` by default,
-    :func:`portable_hash60` for the SQL-replayable strict tier); the k-way
-    min-reduction runs as an Arrow-vectorized Pandas UDF (the equivalent
-    pure higher-order-function expression tree falls out of codegen and
+    (:func:`portable_hash60` inside codegen); the k-way min-reduction
+    runs as an Arrow-vectorized Pandas UDF (the equivalent pure
+    higher-order-function expression tree falls out of codegen and
     evaluates ~50× slower).  Still narrow — no shuffle — so signature
     cost scales linearly at 100 TB."""
-    return _minhash_from_hashes(F.transform(sh, lambda s: hash_fn(s)))
+    return _minhash_from_hashes(F.transform(sh, portable_hash60))
 
 
-def minhash_bands(sig: Column, hash_fn=F.xxhash64) -> Column:
+def minhash_bands(sig: Column) -> Column:
     """Split the signature into LSH bands; each band hashes its slice to a
     single bucket key."""
     return F.transform(
         F.sequence(F.lit(0), F.lit(LSH_BANDS - 1)),
         lambda b: F.struct(
             b.alias("band"),
-            hash_fn(F.concat_ws("_", F.transform(
+            portable_hash60(F.concat_ws("_", F.transform(
                 F.slice(sig, b * LSH_ROWS + 1, LSH_ROWS), lambda v: v.cast("string")
             ))).alias("bucket"),
         ),
@@ -185,7 +189,6 @@ def banded_signatures(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
-    hash_fn=F.xxhash64,
 ) -> DataFrame:
     """Skinny LSH band table ``(id, band, bucket)``: narrow shingle →
     signature → banding, exploded per band.  The shared front half of the
@@ -199,9 +202,9 @@ def banded_signatures(
     # Two-step projection: the Pandas-UDF signature must be a materialized
     # column before the banding lambda can reference it (Spark disallows
     # Python UDFs inside higher-order-function lambdas).
-    sigs = sh_df.select("id", minhash_signature(F.col("sh"), hash_fn).alias("sig"))
+    sigs = sh_df.select("id", minhash_signature(F.col("sh")).alias("sig"))
     return sigs.select(
-        "id", F.explode(minhash_bands(F.col("sig"), hash_fn)).alias("bb")
+        "id", F.explode(minhash_bands(F.col("sig"))).alias("bb")
     ).select("id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
 
 
@@ -210,7 +213,6 @@ def minhash_candidates(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
-    hash_fn=F.xxhash64,
 ) -> DataFrame:
     """LSH candidate pairs: docs sharing ≥1 band bucket.
 
@@ -235,7 +237,7 @@ def minhash_candidates(
     should be pre-filtered upstream.
     Returns distinct (id_a, id_b) with id_a < id_b.
     """
-    banded = banded_signatures(df, id_col, text_col, n, hash_fn)
+    banded = banded_signatures(df, id_col, text_col, n)
     buckets = (
         banded.groupBy("band", "bucket")
         .agg(F.sort_array(F.collect_list("id")).alias("ids"))
@@ -269,7 +271,6 @@ def minhash_near_dups(
     text_col: str = "text",
     threshold: float = 0.7,
     n: int = 3,
-    hash_fn=F.xxhash64,
 ) -> DataFrame:
     """MinHash-LSH near-duplicate pairs, verified: candidates from banding,
     confirmed by exact Jaccard on the shingle sets (no false positives).
@@ -287,7 +288,7 @@ def minhash_near_dups(
     ``pairs`` is lazily localCheckpoint-ed first — it forks into the
     candidate-id filter AND the verify joins, and an un-cut lineage would
     re-run the signature/banding subtree once per fork."""
-    pairs = minhash_candidates(df, id_col, text_col, n, hash_fn).localCheckpoint(
+    pairs = minhash_candidates(df, id_col, text_col, n).localCheckpoint(
         eager=False
     )
     cand_ids = pairs.select(
@@ -325,14 +326,13 @@ def minhash_index_write(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
-    hash_fn=F.xxhash64,
 ) -> None:
     """Persist the corpus's LSH band table as the near-dup INDEX: the
     skinny ``(id, band, bucket)`` rows are all a future batch needs to
     find its candidates — signatures are never recomputed for the corpus,
     and the raw text is only consulted for verification of candidate ids
     (index-as-table, the same contract as the IVF/PQ tiers)."""
-    banded_signatures(df, id_col, text_col, n, hash_fn).write.mode(
+    banded_signatures(df, id_col, text_col, n).write.mode(
         "overwrite"
     ).parquet(path)
 
@@ -346,7 +346,6 @@ def minhash_index_probe(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
-    hash_fn=F.xxhash64,
 ) -> DataFrame:
     """Incremental NEAR-dup: tonight's batch against the stored corpus
     index.  The batch computes its own band table (narrow, O(|batch|));
@@ -359,7 +358,7 @@ def minhash_index_probe(
     Completes the dedup matrix: exact×full (``dedup_exact``),
     exact×incremental (``dedup_incremental``), near×full
     (``minhash_near_dups``), near×incremental (this)."""
-    b_banded = banded_signatures(batch, id_col, text_col, n, hash_fn).select(
+    b_banded = banded_signatures(batch, id_col, text_col, n).select(
         F.col("id").alias("batch_id"), "band", "bucket"
     )
     index = spark.read.parquet(path).select(
@@ -408,7 +407,7 @@ _NORM_SPLIT_SQL = (
 )
 
 def minhash_portable_ctes(src: str = "documents") -> str:
-    """CTE chain replaying shingles → 32-bit portable base hashes → 64
+    """CTE chain replaying shingles → portable base hashes mod p → 64
     permuted minima → band buckets in DuckDB, over any source relation
     with (doc_id, text) columns.  Ends at ``bucket`` (doc_id, band,
     bucket) and also exposes ``sh`` (doc_id, shingle set) for the
@@ -425,16 +424,16 @@ def minhash_portable_ctes(src: str = "documents") -> str:
         FROM docs_n
     ),
     shex AS (SELECT doc_id, unnest(sh) AS s FROM sh),
-    h32 AS (
+    hp AS (
         SELECT doc_id,
-               {PORTABLE_HASH60_SQL.format(s='s')} & 4294967295 AS h
+               {PORTABLE_HASH60_SQL.format(s='s')} % {MINHASH_P} AS h
         FROM shex
     ),
     perm(i, a, b) AS (VALUES
         {_PERM_VALUES_SQL}),
     sig AS (
-        SELECT doc_id, i, MIN((a * h + b) % {_MERSENNE61}) AS s
-        FROM h32, perm GROUP BY doc_id, i
+        SELECT doc_id, i, MIN((a * h + b) % {MINHASH_P}) AS s
+        FROM hp, perm GROUP BY doc_id, i
     ),
     bucket AS (
         SELECT doc_id, i // {LSH_ROWS} AS band,
@@ -459,13 +458,18 @@ _JACCARD_SQL = (
 # ---------------------------------------------------------------------------
 
 
+#: SimHash signature width: the bits of a :func:`portable_hash60` token
+#: hash, so every bit of the signature is live.
+SIMHASH_BITS = 60
+
+
 @pandas_udf(LongType())
 def _simhash_from_hashes(hashes: pd.Series) -> pd.Series:
-    """Vectorized 64-bit SimHash: bit j of the signature is set iff
-    Σ over tokens of (+1 if bit j of the token's xxhash64 is set else −1)
-    is positive.  Per row: unpack the m×64 bit matrix with one shift
-    broadcast, column-sum, threshold — O(64·m) numpy ops."""
-    shifts = np.arange(64, dtype=np.uint64)
+    """Vectorized 60-bit SimHash: bit j of the signature is set iff
+    Σ over tokens of (+1 if bit j of the token's hash is set else −1)
+    is positive.  Per row: unpack the m×60 bit matrix with one shift
+    broadcast, column-sum, threshold — O(60·m) numpy ops."""
+    shifts = np.arange(SIMHASH_BITS, dtype=np.uint64)
     res = np.zeros(len(hashes), dtype=np.int64)
     for i, h in enumerate(hashes):
         if h is None or len(h) == 0:
@@ -477,60 +481,14 @@ def _simhash_from_hashes(hashes: pd.Series) -> pd.Series:
     return pd.Series(res)
 
 
-def simhash(tokens: Column, hash_fn=F.xxhash64) -> Column:
-    """64-bit SimHash per row: token hashing JVM-side (``xxhash64`` by
-    default; :func:`portable_hash60` narrows the vote to bits 0–59, which
-    stays consistent across engines because the top 4 bits are then zero
-    for every document), the 64-way bit-vote as an Arrow-vectorized
-    Pandas UDF (a pure expression formulation duplicates the per-bit
-    aggregate 64× after Catalyst inlining — measured ~100× slower).
-    Narrow — no shuffle at any scale."""
-    return _simhash_from_hashes(F.transform(tokens, lambda t: hash_fn(t)))
-
-
-def simhash_near_dups(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-) -> DataFrame:
-    """SimHash near-dups, single-prefix probe: bucket by the top-16-bit
-    prefix (docs within small Hamming distance usually share the prefix),
-    then verify with ``bit_count(xor) <= max_hamming`` inside each bucket.
-    Cheapest probe, but misses pairs whose differing bits fall in the
-    prefix — :func:`simhash_near_dups_multiprobe` is the complete-recall
-    production variant."""
-    from ..session import spread
-
-    toks = F.split(normalize_text(F.col(text_col)), " ")
-    # r11: spread before the per-row signature work (the banded_signatures
-    # idiom) — one task off a single-file scan otherwise.
-    sigs = (
-        spread(df, id_col)
-        .select(
-            F.col(id_col).alias("id"),
-            simhash(toks).alias("sig"),
-        )
-        .withColumn("prefix", F.shiftrightunsigned(F.col("sig"), 48))
-        # checkpoint: the a/b self-join would otherwise recompute every
-        # signature once per side (r11).  Eager (r12): the two sides are
-        # CONCURRENT stages, so a lazy checkpoint still raced both into
-        # recomputing the signature chain before the cache filled (the
-        # minhash sh_df finding; local A/B a wash at sf0.1 — the flip is
-        # the scale posture, one signature pass guaranteed).
-        .localCheckpoint(eager=True)
-    )
-    a, b = sigs.alias("a"), sigs.alias("b")
-    return (
-        a.join(b, "prefix")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .withColumn(
-            "hamming",
-            F.bit_count(F.col("a.sig").bitwiseXOR(F.col("b.sig"))),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), "hamming")
-    )
+def simhash(tokens: Column) -> Column:
+    """60-bit SimHash per row: token hashing JVM-side
+    (:func:`portable_hash60`, so DuckDB recomputes the same signature),
+    the 60-way bit-vote as an Arrow-vectorized Pandas UDF (a pure
+    expression formulation duplicates the per-bit aggregate 60× after
+    Catalyst inlining — measured ~100× slower).  Narrow — no shuffle at
+    any scale."""
+    return _simhash_from_hashes(F.transform(tokens, portable_hash60))
 
 
 def simhash_near_dups_multiprobe(
@@ -538,15 +496,15 @@ def simhash_near_dups_multiprobe(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_hamming: int = 3,
-    hash_fn=F.xxhash64,
 ) -> DataFrame:
     """SimHash near-dups with block-decomposition probing — the 100 TB
     variant, with *provably complete* recall.
 
-    Pigeonhole (Manku/Jain/Sarma, WWW'07 §3): split the 64-bit signature
-    into ``max_hamming + 1`` equal blocks; two signatures within
-    ``max_hamming`` differing bits can spoil at most ``max_hamming``
-    blocks, so AT LEAST ONE block is bit-identical.  Bucketing on every
+    Pigeonhole (Manku/Jain/Sarma, WWW'07 §3): split the 60-bit signature
+    into ``max_hamming + 1`` contiguous blocks (widths differ by at most
+    one bit); two signatures within ``max_hamming`` differing bits can
+    spoil at most ``max_hamming`` blocks, so AT LEAST ONE block is
+    bit-identical.  Bucketing on every
     ``(block_index, block_value)`` key therefore surfaces every qualifying
     pair — unlike prefix rotation, which only samples probe positions.
 
@@ -555,14 +513,12 @@ def simhash_near_dups_multiprobe(
     bucket key (sort-merge/AQE like any keyed join — never all-pairs),
     pair-level ``dropDuplicates`` (a pair can match in several blocks),
     exact ``bit_count(xor)`` verify on candidates only.  Collision noise
-    per bucket is ~n/2^width; with k=3 → four 16-bit blocks, the same
-    bucket-width economics as the single-prefix probe, ×4 candidate
-    volume for complete recall.
+    per bucket is ~n/2^width; with k=3 → four 15-bit blocks.
     """
-    n_blocks = max_hamming + 1
-    width = 64 // n_blocks
-    mask = (1 << width) - 1
     from ..session import spread
+
+    n_blocks = max_hamming + 1
+    cuts = [i * SIMHASH_BITS // n_blocks for i in range(n_blocks + 1)]
 
     toks = F.split(normalize_text(F.col(text_col)), " ")
     # r11: spread before the signature expression (one task off a single-
@@ -571,7 +527,7 @@ def simhash_near_dups_multiprobe(
     # the self-join's two sides share one materialisation instead of
     # recomputing every signature per side.
     sigs = spread(df, id_col).select(
-        F.col(id_col).alias("id"), simhash(toks, hash_fn).alias("sig")
+        F.col(id_col).alias("id"), simhash(toks).alias("sig")
     )
     blocks = sigs.select(
         "id",
@@ -579,15 +535,17 @@ def simhash_near_dups_multiprobe(
         F.posexplode(
             F.array(
                 *[
-                    F.shiftrightunsigned(F.col("sig"), i * width).bitwiseAND(
-                        F.lit(mask)
+                    F.shiftrightunsigned(F.col("sig"), lo).bitwiseAND(
+                        F.lit((1 << (hi - lo)) - 1)
                     )
-                    for i in range(n_blocks)
+                    for lo, hi in zip(cuts, cuts[1:])
                 ]
             )
         ).alias("block_idx", "block_val"),
-        # eager (r12): self-join sides are concurrent stages — see
-        # simhash_near_dups.
+        # eager (r12): the self-join's two sides are CONCURRENT stages, so
+        # a lazy checkpoint still raced both into recomputing the
+        # signature chain before the cache filled (the minhash sh_df
+        # finding) — eager guarantees one signature pass.
     ).localCheckpoint(eager=True)
     a = blocks.select(
         F.col("id").alias("id_a"), F.col("sig").alias("sig_a"), "block_idx", "block_val"
@@ -731,37 +689,6 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("dedup_minhash_lsh")  # rows-only: MinHash banding isn't ANSI-SQL
-def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup pairs at Jaccard ≥ 0.5 (verified, so the LSH
-    stage only affects recall, never precision)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return minhash_near_dups(docs, threshold=0.5)
-
-
-@register("dedup_incremental_neardup")  # rows-only: MinHash isn't ANSI-SQL
-def dedup_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental near-dup — tonight's ingest batch (src0/src1) probed
-    against the STORED corpus band index: batch-side signatures only,
-    candidates from the skinny index join, Jaccard verify on candidate
-    text.  Probe == direct cross-group pairs is asserted in tests."""
-    import os
-
-    from ..fsutil import process_staging_dir
-
-    docs = load_table(spark, sf_dir, "documents")
-    is_batch = F.col("source").isin(*INCREMENTAL_BATCH_SOURCES)
-    corpus, batch = docs.filter(~is_batch), docs.filter(is_batch)
-    path = process_staging_dir(
-        f"mhindex_{os.path.basename(os.path.normpath(sf_dir))}",
-        "minhash_bands",
-    )
-    minhash_index_write(corpus, path)
-    return minhash_index_probe(spark, path, batch, corpus, threshold=0.5).orderBy(
-        "batch_id", "corpus_id"
-    )
-
-
 _INCREMENTAL_NEARDUP_PORTABLE_ORACLE = f"""
     WITH {MINHASH_PORTABLE_CTES},
     side AS (
@@ -787,19 +714,23 @@ _INCREMENTAL_NEARDUP_PORTABLE_ORACLE = f"""
 
 
 @register(
+    "dedup_incremental_neardup", oracle=_INCREMENTAL_NEARDUP_PORTABLE_ORACLE
+)
+@register(
     "dedup_incremental_neardup_portable",
     oracle=_INCREMENTAL_NEARDUP_PORTABLE_ORACLE,
 )
 def dedup_incremental_neardup_portable(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Strict tier of the incremental near-dup probe: the stored band
-    index is written AND probed with :func:`portable_hash60`, so the
+    """Incremental near-dup — tonight's ingest batch (src0/src1) probed
+    against the STORED corpus band index: batch-side signatures only,
+    candidates from the skinny index join, Jaccard verify on candidate
+    text (probe == direct cross-group pairs is asserted in tests).  The
     DuckDB oracle replays the batch-vs-corpus banding (bucket collisions
     restricted to batch×corpus pairs) plus the exact-Jaccard verify —
     certifying the index-write/probe split end-to-end, not just the
-    verify stage.  Same code path as the xxhash64 production tier via
-    ``hash_fn``."""
+    verify stage.  Registered under both names."""
     import os
 
     from ..fsutil import process_staging_dir
@@ -808,22 +739,13 @@ def dedup_incremental_neardup_portable(
     is_batch = F.col("source").isin(*INCREMENTAL_BATCH_SOURCES)
     corpus, batch = docs.filter(~is_batch), docs.filter(is_batch)
     path = process_staging_dir(
-        f"mhindexp_{os.path.basename(os.path.normpath(sf_dir))}",
-        "minhash_bands_portable",
+        f"mhindex_{os.path.basename(os.path.normpath(sf_dir))}",
+        "minhash_bands",
     )
-    minhash_index_write(corpus, path, hash_fn=portable_hash60)
+    minhash_index_write(corpus, path)
     return minhash_index_probe(
-        spark, path, batch, corpus, threshold=0.5, hash_fn=portable_hash60
+        spark, path, batch, corpus, threshold=0.5
     ).orderBy("batch_id", "corpus_id")
-
-
-@register("dedup_simhash")  # rows-only: bit-level simhash isn't ANSI-SQL
-def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Block-decomposition probe (complete recall for Hamming ≤ 3) — the
-    production path; the single-prefix variant remains as the cheap
-    sampling tier."""
-    docs = load_table(spark, sf_dir, "documents")
-    return simhash_near_dups_multiprobe(docs, max_hamming=3)
 
 
 _MINHASH_PORTABLE_ORACLE = f"""
@@ -843,25 +765,23 @@ _MINHASH_PORTABLE_ORACLE = f"""
 """
 
 
+@register("dedup_minhash_lsh", oracle=_MINHASH_PORTABLE_ORACLE)
 @register("dedup_minhash_lsh_portable", oracle=_MINHASH_PORTABLE_ORACLE)
 def dedup_minhash_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup pairs with the banding REPLAYED END-TO-END by
-    the DuckDB oracle — the strict tier of ``dedup_minhash_lsh``.
+    """MinHash+LSH near-dup pairs at Jaccard ≥ 0.5 (verified, so the LSH
+    stage only affects recall, never precision), with the banding
+    REPLAYED END-TO-END by the DuckDB oracle.
 
-    Same pipeline, same constants (k=64, 16×4 banding, M61 permutation
-    arithmetic), one substitution: every hash site (shingle base hash,
-    band-bucket key) uses :func:`portable_hash60` (md5-derived, identical
-    in both engines) instead of ``xxhash64``.  The oracle recomputes
-    shingles → 32-bit base hashes → 64 permuted minima → band buckets →
-    colliding pairs → exact-Jaccard verification in pure SQL, so the
-    strict hash check covers the ENTIRE candidate-generation logic —
-    banding recall included — not just the verify stage.  The xxhash64
-    tier stays registered (rows-only) as the production fast path; both
-    share this one code path via the ``hash_fn`` parameter, so the strict
-    replay certifies the same banding/bucketing/verify code the fast tier
-    runs."""
+    Constants: k=64, 16×4 banding, 2-universal permutations mod 2^31−1;
+    every hash site (shingle base hash, band-bucket key) is
+    :func:`portable_hash60` (md5-derived, identical in both engines).
+    The oracle recomputes shingles → base hashes mod p → 64 permuted
+    minima → band buckets → colliding pairs → exact-Jaccard verification
+    in pure SQL, so the strict hash check covers the ENTIRE
+    candidate-generation logic — banding recall included — not just the
+    verify stage.  Registered under both names."""
     docs = load_table(spark, sf_dir, "documents")
-    return minhash_near_dups(docs, threshold=0.5, hash_fn=portable_hash60)
+    return minhash_near_dups(docs, threshold=0.5)
 
 
 _SIMHASH_PORTABLE_ORACLE = f"""
@@ -874,7 +794,7 @@ _SIMHASH_PORTABLE_ORACLE = f"""
     votes AS (
         SELECT doc_id, j,
                SUM(CASE WHEN (h >> j) & 1 = 1 THEN 1 ELSE -1 END) AS v
-        FROM h, range(60) r(j) GROUP BY doc_id, j
+        FROM h, range({SIMHASH_BITS}) r(j) GROUP BY doc_id, j
     ),
     sig AS (
         SELECT doc_id,
@@ -888,23 +808,22 @@ _SIMHASH_PORTABLE_ORACLE = f"""
 """
 
 
+@register("dedup_simhash", oracle=_SIMHASH_PORTABLE_ORACLE)
 @register("dedup_simhash_portable", oracle=_SIMHASH_PORTABLE_ORACLE)
 def dedup_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dups with a strict SQL oracle — possible because the
     block-decomposition probe has PROVABLY COMPLETE recall (pigeonhole:
     ≤3 differing bits cannot spoil all 4 blocks), so the final answer is
     exactly "all pairs at Hamming ≤ 3", independent of how the blocking
-    found them.  The oracle recomputes each document's signature (per-bit
-    majority vote over :func:`portable_hash60` token hashes — bits 60–63
-    are zero on both engines) and checks every pair directly; quadratic
-    for DuckDB at sf0.01 (500 docs), while the Spark side keeps the
-    bucketed multiprobe join it runs at scale.  The xxhash64 tier stays
-    registered as the production path; both share one code path via
-    ``hash_fn``."""
+    found them.  The oracle recomputes each document's 60-bit signature
+    (per-bit majority vote over :func:`portable_hash60` token hashes)
+    and checks every pair directly; quadratic for DuckDB at sf0.01 (500
+    docs), while the Spark side keeps the bucketed multiprobe join it
+    runs at scale.  Registered under both names."""
     docs = load_table(spark, sf_dir, "documents")
-    return simhash_near_dups_multiprobe(
-        docs, max_hamming=3, hash_fn=portable_hash60
-    ).withColumn("hamming", F.col("hamming").cast("long"))
+    return simhash_near_dups_multiprobe(docs, max_hamming=3).withColumn(
+        "hamming", F.col("hamming").cast("long")
+    )
 
 
 @register(
@@ -1016,43 +935,6 @@ def dedup_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("day")
 
 
-@register("dedup_neardup_pipeline")  # rows-only: MinHash banding isn't ANSI-SQL
-def dedup_neardup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end near-duplicate dedup — the composed production pipeline:
-    MinHash-LSH verified pairs → connected components (a doc transitively
-    linked to a dup cluster must not survive alongside its twin) → keeper
-    election (min doc_id per component) → per-source yield accounting.
-
-    Composition of three already-verified operators; the pipeline query
-    certifies they compose (id spaces line up, singleton docs survive as
-    their own keeper).  Scale posture is inherited: banded candidate
-    generation (no self-join), iterative pointer-jumping components with
-    plan-DAG truncation, and O(sources) final reduce.
-    """
-    from .graph import connected_components
-
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_near_dups(docs, threshold=0.5)
-    nodes = docs.select(F.col("doc_id").alias("id"))
-    comp = connected_components(
-        nodes, pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    )
-    # r12: keeper == component (components returns the min reachable id),
-    # so the keeper groupBy + join re-derived an existing column.
-    labeled = docs.join(comp, docs.doc_id == comp.id).withColumn(
-        "is_keeper", (F.col("doc_id") == F.col("component")).cast("int")
-    )
-    return (
-        labeled.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("is_keeper").alias("n_keepers"),
-            F.round(F.sum("is_keeper") / F.count(F.lit(1)), 6).alias("yield_frac"),
-        )
-        .orderBy("source")
-    )
-
-
 _NEARDUP_PIPELINE_PORTABLE_ORACLE = f"""
     WITH RECURSIVE {MINHASH_PORTABLE_CTES},
     cand AS (
@@ -1089,25 +971,33 @@ _NEARDUP_PIPELINE_PORTABLE_ORACLE = f"""
 """
 
 
+@register("dedup_neardup_pipeline", oracle=_NEARDUP_PIPELINE_PORTABLE_ORACLE)
 @register(
     "dedup_neardup_pipeline_portable", oracle=_NEARDUP_PIPELINE_PORTABLE_ORACLE
 )
 def dedup_neardup_pipeline_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Strict tier of the composed near-dup pipeline: portable-hash
-    MinHash banding (so the oracle replays candidate generation and the
-    Jaccard verify) feeding a recursive-CTE component closure, keeper
-    election, and per-source yield — the full production composition
-    hash-checked end-to-end.  Same code path as ``dedup_neardup_pipeline``
-    via ``hash_fn``; the xxhash64 tier stays the production fast path."""
+    """End-to-end near-duplicate dedup — the composed production pipeline:
+    MinHash-LSH verified pairs → connected components (a doc transitively
+    linked to a dup cluster must not survive alongside its twin) → keeper
+    election (min doc_id per component) → per-source yield accounting.
+
+    The oracle replays all of it: portable-hash candidate generation and
+    the Jaccard verify, a recursive-CTE component closure, keeper
+    election and per-source yield — so the certificate covers that the
+    operators compose (id spaces line up, singleton docs survive as
+    their own keeper).  Scale posture is inherited: banded candidate
+    generation (no self-join), components with plan-DAG truncation, and
+    O(sources) final reduce.  Registered under both names."""
     from .graph import connected_components
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_near_dups(docs, threshold=0.5, hash_fn=portable_hash60)
+    pairs = minhash_near_dups(docs, threshold=0.5)
     nodes = docs.select(F.col("doc_id").alias("id"))
     comp = connected_components(
         nodes, pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     )
-    # r12: keeper == component (see dedup_neardup_pipeline).
+    # r12: keeper == component (components returns the min reachable id),
+    # so a keeper groupBy + join would re-derive an existing column.
     labeled = docs.join(comp, docs.doc_id == comp.id).withColumn(
         "is_keeper", (F.col("doc_id") == F.col("component")).cast("int")
     )

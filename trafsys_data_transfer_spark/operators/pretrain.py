@@ -11,9 +11,10 @@ artifact a data lead actually reviews before a training run:
 
 Composition is the point: id spaces must line up across seven operators,
 keeper elections must not resurrect dropped docs, and the funnel counts
-must be monotone non-increasing — invariants pytest asserts.  Registered
-rows-only (MinHash banding and the LM are not ANSI-SQL), with every
-count an exact integer so the driver's rows-only check is stable.
+must be monotone non-increasing — invariants pytest asserts.  Every
+count is an exact integer, and the whole funnel — portable-hash MinHash
+banding and the bigram LM included — is replayed stage by stage by the
+DuckDB oracle (:func:`_pretrain_portable_oracle`).
 
 Scale posture is inherited from the components (each documented in its
 own module): the funnel adds only narrow flag columns and O(stages)
@@ -55,7 +56,6 @@ def pretrain_funnel(
     spark: SparkSession,
     docs: DataFrame,
     lm_keep_pctile: float = LM_KEEP_PCTILE,
-    hash_fn=F.xxhash64,
 ) -> DataFrame:
     """Run the full curation funnel; returns (stage_no, stage, n_docs,
     n_tokens) with exact-integer counts.  ``lm_keep_pctile=1.0`` keeps
@@ -128,7 +128,7 @@ def pretrain_funnel(
     stages.append(("exact_dedup", exact))
 
     # 4. Near-dup clustering: LSH pairs → components → min-id keeper
-    pairs = minhash_near_dups(exact, threshold=0.5, hash_fn=hash_fn)
+    pairs = minhash_near_dups(exact, threshold=0.5)
     comp = connected_components(
         exact.select(F.col("doc_id").alias("id")),
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
@@ -175,13 +175,6 @@ def pretrain_funnel(
         F.coalesce(F.sum("n_tokens"), F.lit(0)).alias("n_tokens"),
     )
     return funnel.unionByName(seqs).orderBy("stage_no")
-
-
-@register("pretrain_data_pipeline")  # rows-only: composes MinHash + LM
-# (not ANSI-SQL); funnel invariants are pytest-asserted.
-def pretrain_data_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stage-by-stage yield funnel of the full curation pipeline."""
-    return pretrain_funnel(spark, load_table(spark, sf_dir, "documents"))
 
 
 def _pretrain_portable_oracle() -> str:
@@ -330,19 +323,18 @@ def _pretrain_portable_oracle() -> str:
     """
 
 
-@register("pretrain_data_pipeline_portable", oracle=_pretrain_portable_oracle())
+_PRETRAIN_ORACLE = _pretrain_portable_oracle()
+
+
+@register("pretrain_data_pipeline", oracle=_PRETRAIN_ORACLE)
+@register("pretrain_data_pipeline_portable", oracle=_PRETRAIN_ORACLE)
 def pretrain_data_pipeline_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Strict tier of the capstone: the whole curation funnel — Gopher
+    """Stage-by-stage yield funnel of the full curation pipeline — Gopher
     gate, held-in LM percentile filter, exact dedup, portable-hash
     near-dup clustering, 5-gram decontamination, packed-sequence
-    accounting — replayed end-to-end by the DuckDB oracle.  Same code
-    path as ``pretrain_data_pipeline`` via ``hash_fn``; the xxhash64
-    capstone stays the production fast path."""
-    from .dedup import portable_hash60
-
-    return pretrain_funnel(
-        spark, load_table(spark, sf_dir, "documents"), hash_fn=portable_hash60
-    )
+    accounting — replayed end-to-end by the DuckDB oracle.  Registered
+    under both names."""
+    return pretrain_funnel(spark, load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------

@@ -23,7 +23,7 @@ from pyspark.sql.window import Window
 
 from ..registry import register
 from ..sources.fixtures import load_table
-from .dedup import fingerprint
+from .dedup import fingerprint, normalize_text, portable_hash60
 
 #: Words treated as stopwords for quality scoring (subset of the fixture
 #: vocabulary so ratios are non-degenerate).
@@ -272,16 +272,30 @@ def _rolling_fps(token_hashes, window: int):
     return doc_fp, fps
 
 
+def _token_hashes(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """``(id_col, th)``: the normalised text's token hashes
+    (:func:`portable_hash60`, JVM-side) — the input of every Rabin-Karp
+    scan below."""
+    from ..session import spread
+
+    toks = F.split(normalize_text(F.col(text_col)), " ")
+    # r11: spread before the token-hash projection + Python boundary —
+    # one core / one Python worker off a single-file scan otherwise.
+    return spread(docs, id_col).select(
+        F.col(id_col), F.transform(toks, portable_hash60).alias("th")
+    )
+
+
 def rolling_fingerprint_table(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    window: int = RH_WINDOW, hash_fn=F.xxhash64,
+    window: int = RH_WINDOW,
 ) -> DataFrame:
     """Per-document rolling-hash fingerprints: a whole-document polynomial
     fingerprint plus min/max/count over the sliding w-token window hashes
     (the min is winnowing's selected fingerprint).  Token hashing is
-    JVM-side ``xxhash64``; the sequential rolling scan runs in a Pandas UDF
-    (it is inherently order-dependent, so no builtin expresses it) — still
-    narrow, no shuffle."""
+    JVM-side (:func:`_token_hashes`); the sequential rolling scan runs in
+    a Pandas UDF (it is inherently order-dependent, so no builtin
+    expresses it) — still narrow, no shuffle."""
     out_schema = StructType(
         [
             StructField(id_col, LongType()),
@@ -320,25 +334,16 @@ def rolling_fingerprint_table(
             out.insert(0, id_col, pdf[id_col].values)
             yield out
 
-    from ..session import spread
-
-    toks = F.split(
-        F.trim(F.regexp_replace(F.lower(F.col(text_col)), "\\s+", " ")), " "
+    return _token_hashes(docs, id_col, text_col).mapInPandas(
+        roll, schema=out_schema
     )
-    # r11: spread before the token-hash projection + Python boundary —
-    # one core / one Python worker off a single-file scan otherwise.
-    hashed = spread(docs, id_col).select(
-        F.col(id_col),
-        F.transform(toks, lambda t: hash_fn(t)).alias("th"),
-    )
-    return hashed.mapInPandas(roll, schema=out_schema)
 
 
 @register(
     "text_rolling_fingerprint",
-    # STRICT certificate (r11, VERDICT r10 task 4): xxhash64 token hashes
-    # aren't in DuckDB, so the registered row carries the one value the
-    # oracle CAN recompute — the window count from the shared
+    # STRICT certificate (r11, VERDICT r10 task 4): the registered row
+    # carries the one value the oracle recomputes without replaying the
+    # Rabin-Karp scan — the window count from the shared
     # normalisation/tokenisation — plus in-band booleans proving the
     # rolling recurrence: the O(1)-update hash of the LAST window must
     # equal its direct polynomial evaluation (a wrong b_pow, a dropped
@@ -411,19 +416,14 @@ def text_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
             out.insert(0, "doc_id", pdf["doc_id"].values)
             yield out
 
-    from ..session import spread
-
-    toks = F.split(
-        F.trim(F.regexp_replace(F.lower(F.col("text")), "\\s+", " ")), " "
+    return (
+        _token_hashes(docs, "doc_id", "text")
+        .mapInPandas(certify, schema=out_schema)
+        .orderBy("doc_id")
     )
-    # r11: spread before the token-hash projection + Python boundary.
-    hashed = spread(docs, "doc_id").select(
-        "doc_id", F.transform(toks, lambda t: F.xxhash64(t)).alias("th")
-    )
-    return hashed.mapInPandas(certify, schema=out_schema).orderBy("doc_id")
 
 
-def winnow_near_dup_candidates(docs: DataFrame, hash_fn=F.xxhash64) -> DataFrame:
+def winnow_near_dup_candidates(docs: DataFrame) -> DataFrame:
     """Winnowing-fingerprint near-dup candidates (the MOSS recipe): docs
     sharing a selected (min) window fingerprint are candidate pairs,
     verified by exact shingle Jaccard.  A different recall profile from
@@ -435,7 +435,7 @@ def winnow_near_dup_candidates(docs: DataFrame, hash_fn=F.xxhash64) -> DataFrame
     candidate pairs only."""
     from .dedup import jaccard, normalize_text, shingles
 
-    fps = rolling_fingerprint_table(docs, hash_fn=hash_fn).filter(
+    fps = rolling_fingerprint_table(docs).filter(
         F.col("min_window_fp").isNotNull()
     )
     buckets = (
@@ -493,13 +493,6 @@ def winnow_near_dup_candidates(docs: DataFrame, hash_fn=F.xxhash64) -> DataFrame
     )
 
 
-@register("text_winnow_candidates")  # rows-only: xxhash64 isn't ANSI-SQL
-def text_winnow_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production winnowing tier (xxhash64 token hashes) — see
-    :func:`winnow_near_dup_candidates`."""
-    return winnow_near_dup_candidates(load_table(spark, sf_dir, "documents"))
-
-
 def _winnow_portable_oracle() -> str:
     from .dedup import PORTABLE_HASH60_SQL
 
@@ -547,21 +540,22 @@ def _winnow_portable_oracle() -> str:
     """
 
 
-@register("text_winnow_candidates_portable", oracle=_winnow_portable_oracle())
+_WINNOW_ORACLE = _winnow_portable_oracle()
+
+
+@register("text_winnow_candidates", oracle=_WINNOW_ORACLE)
+@register("text_winnow_candidates_portable", oracle=_WINNOW_ORACLE)
 def text_winnow_candidates_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Strict tier of the winnowing candidates: token hashes come from
+    """Winnowing near-dup candidates (see
+    :func:`winnow_near_dup_candidates`): token hashes come from
     ``portable_hash60`` (reduced mod 2^31−1), so the DuckDB oracle
     replays the whole recipe — per-window Rabin-Karp fingerprints as
     Horner ``list_reduce`` windows (the rolling-update recurrence equals
     the direct polynomial, pinned by text_rolling_fingerprint's
     certificate), winnowing's min-fingerprint selection, fingerprint
-    bucketing, and the exact-Jaccard verify.  Same code path as the
-    xxhash64 production tier via ``hash_fn``."""
-    from .dedup import portable_hash60
-
-    return winnow_near_dup_candidates(
-        load_table(spark, sf_dir, "documents"), hash_fn=portable_hash60
-    )
+    bucketing, and the exact-Jaccard verify.  Registered under both
+    names."""
+    return winnow_near_dup_candidates(load_table(spark, sf_dir, "documents"))
 
 
 @register(
